@@ -36,8 +36,9 @@ interface.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from repostcheckerbot_spark.config import PipelineConfig
@@ -65,6 +66,19 @@ class IncrementalPipeline:
 
     def edges(self) -> DataFrame | None:
         return self.wh.read("edges") if self.wh.exists("edges") else None
+
+    # -- bucket ids under the warehouse hash ---------------------------------
+    def _bucket_set(self, c: str):
+        """Aggregate: the set of ``c``'s bucket ids under this config's
+        warehouse hash — ≤ n_buckets small ints, fused into an aggregate a
+        caller already runs so the writes skip their own collect jobs."""
+        nb = int(self.cfg.warehouse_buckets)
+        return F.collect_set(F.pmod(F.xxhash64(c), F.lit(nb)).cast("int"))
+
+    def _touched_if_layout_matches(self, table: str, buckets: list[int]) -> list[int] | None:
+        """Pre-computed touched buckets are only valid when the table's
+        layout hash matches this config's bucket count."""
+        return buckets if self.wh.get_meta(table, "n_buckets") == self.cfg.warehouse_buckets else None
 
     # -- one micro-batch ------------------------------------------------------
     def process_batch(
@@ -111,17 +125,12 @@ class IncrementalPipeline:
         # doc_sha bucket ids the corpus_reps probe AND merge will touch —
         # all under the warehouse bucket hash, so the downstream
         # read_bucket_pruned / upsert calls skip their own collect jobs.
-        nb = int(cfg.warehouse_buckets)
-        _b = lambda c: F.collect_set(F.pmod(F.xxhash64(c), F.lit(nb)).cast("int"))  # noqa: E731
+        _b = self._bucket_set
         srow = batch_docs.agg(
             F.count(F.lit(1)).alias("n"), _b("conv_id").alias("cb"), _b("doc_sha").alias("sb")
         ).collect()[0]
         n_batch, conv_buckets, sha_buckets = int(srow["n"]), list(srow["cb"]), list(srow["sb"])
-
-        def _tb(table: str, buckets: list[int]) -> list[int] | None:
-            """Pre-computed touched buckets are only valid when the table's
-            layout hash matches this config's bucket count."""
-            return buckets if self.wh.get_meta(table, "n_buckets") == nb else None
+        _tb = self._touched_if_layout_matches
 
         if skip_pruning is not None:
             metrics.record_count("ingest.identity_skip", n_batch, wall_s=_lap(), **skip_pruning)
@@ -207,8 +216,6 @@ class IncrementalPipeline:
         # (blocking.py:21-27) and eagerly checkpointed: it is tiny (≤ cap ×
         # colliding buckets), and the metrics counts + candidate join all read
         # the materialized pool instead of rescanning the corpus.
-        from pyspark.sql import Window
-
         batch_keys = batch_bands.select(*key).distinct()
         if self.wh.exists("corpus_bands"):
             corpus_pruned, pruning = self.wh.read_bucket_pruned(
@@ -337,165 +344,157 @@ class IncrementalPipeline:
         # strict order (the tombstone frame's lineage is caller-owned and must
         # not race a table rewrite).
         overlap = self.wh.exists("corpus_reps") and tombstones is None
-        pool_exec = None
         f_docs = f_reps = f_bands = None
-        if overlap:
-            from concurrent.futures import ThreadPoolExecutor
+        # one pool for every table write of the batch; the finally below
+        # shuts it down on any exit, so a failed scoring job cannot leave
+        # table rewrites running after its exception has propagated
+        pool_exec = ThreadPoolExecutor(max_workers=6) if self.wh.exists("corpus_reps") else None
+        try:
+            if overlap:
+                f_bands = pool_exec.submit(_persist_bands)
+                # two tiny concurrent jobs materialize the checkpoints (their
+                # compute is work the scoring job needed anyway)
+                f_t = pool_exec.submit(texts.count)
+                f_r = pool_exec.submit(reps.count)
+                f_t.result()
+                f_r.result()
+                f_docs = pool_exec.submit(_persist_docs)
+                f_reps = pool_exec.submit(_persist_reps)
 
-            pool_exec = ThreadPoolExecutor(max_workers=6)
-            f_bands = pool_exec.submit(_persist_bands)
-            # two tiny concurrent jobs materialize the checkpoints (their
-            # compute is work the scoring job needed anyway)
-            f_t = pool_exec.submit(texts.count)
-            f_r = pool_exec.submit(reps.count)
-            f_t.result()
-            f_r.result()
-            f_docs = pool_exec.submit(_persist_docs)
-            f_reps = pool_exec.submit(_persist_reps)
-
-        # exact-exclusion (J4) is SHA-INEQUALITY, not an edge anti-join: exact
-        # edges are stars now, so two non-rep members of one sha group never
-        # appear in `exact` — equal shas are the complete exclusion criterion
-        # (same shape as scoring.fuzzy_edges).
-        paired = (
-            cand.join(
-                texts.select(F.col("conv_id").alias("conv_id_a"), F.col("doc_sha").alias("sha_a"), F.col("norm_text").alias("ta")),
-                "conv_id_a",
-            )
-            .join(
-                texts.select(F.col("conv_id").alias("conv_id_b"), F.col("doc_sha").alias("sha_b"), F.col("norm_text").alias("tb")),
-                "conv_id_b",
-            )
-            .where(F.col("sha_a") != F.col("sha_b"))
-        )
-        # spread the CPU-bound scoring stage, keyed by conv_id_b so the
-        # scorer's set_seq2 reuse fires (see scoring.fuzzy_edges)
-        paired = paired.repartition(
-            paired.sparkSession.sparkContext.defaultParallelism, F.col("conv_id_b")
-        )
-        fuzzy = (
-            paired.withColumn("ratio", difflib_ratio_once(F.col("ta"), F.col("tb")))
-            .where(F.col("ratio") > F.lit(cfg.ratio_threshold))
-            .select(
-                "conv_id_a",
-                "conv_id_b",
-                (F.col("ratio") * 100.0).alias("score"),
-                F.lit("fuzzy").alias("method"),
-            )
-        )
-        new_edges = exact.unionByName(fuzzy)
-
-        # ---- J5: drop edges touching upstream-deleted conversations ---------
-        if tombstones is not None:
-            dead = tombstones.select("conv_id")
-            new_edges = new_edges.join(
-                dead.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a", "left_anti"
-            ).join(dead.withColumnRenamed("conv_id", "conv_id_b"), "conv_id_b", "left_anti")
-        # lazy: the metric aggregate materializes the checkpoint — it MUST run
-        # before the edges merge rewrites the table this batch appends to (in
-        # overlap mode the scoring lineage reads only checkpoints, so the
-        # docs/reps/bands rewrites may already be in flight). The same
-        # aggregate also yields the edge-table bucket ids the edges merge
-        # will touch (fused, like the batch_docs aggregate above).
-        new_edges = new_edges.localCheckpoint(eager=False)
-        erow = new_edges.agg(
-            F.count(F.lit(1)).alias("n"), _b("conv_id_a").alias("eb")
-        ).collect()[0]
-        edge_buckets = list(erow["eb"])
-        metrics.record_count("ingest.new_edges", int(erow["n"]), wall_s=_lap())
-
-        # ---- full-recompute clusters swap, hoisted INTO the persist pool ----
-        # Below the hybrid threshold the cluster update is a full CC +
-        # clusters swap (see the growth section below). Its inputs are all
-        # available BEFORE the four state writes from pre-merge state:
-        #   edges    ≡ old edges table ∪ new_edges checkpoint (exactly what
-        #              the post-merge table will contain)
-        #   vertices ≡ old clusters conv_ids ∪ batch conv_ids (the clusters
-        #              table carries one row per corpus conversation — the
-        #              invariant both growth paths and the purge janitor
-        #              maintain)
-        # and the clusters table is the ONE table none of the four persists
-        # touches, so the whole recompute runs as a FIFTH concurrent task:
-        # batch wall = max(persists, clusters swap), not their sum. The old
-        # edge files are swapped by _persist_edges mid-pool, so the union is
-        # EAGERLY checkpointed first — every CC job then reads the
-        # checkpoint, never the live files.
-        if self.wh.exists("clusters"):
-            old_n = self.wh.get_meta("clusters", "n_rows")
-            if old_n is None:
-                old_n = self.wh.read("clusters").count()
-        else:
-            old_n = -1
-        full_cc_in_pool = (
-            self.wh.exists("corpus_reps")
-            and 0 <= old_n < cfg.incremental_clusters_min_corpus
-        )
-        if full_cc_in_pool:
-            cc_edges = new_edges.select("conv_id_a", "conv_id_b")
-            if self.wh.exists("edges"):
-                cc_edges = (
-                    self.wh.read("edges").select("conv_id_a", "conv_id_b").unionByName(cc_edges)
+            # exact-exclusion (J4) is SHA-INEQUALITY, not an edge anti-join: exact
+            # edges are stars now, so two non-rep members of one sha group never
+            # appear in `exact` — equal shas are the complete exclusion criterion
+            # (same shape as scoring.fuzzy_edges).
+            paired = (
+                cand.join(
+                    texts.select(F.col("conv_id").alias("conv_id_a"), F.col("doc_sha").alias("sha_a"), F.col("norm_text").alias("ta")),
+                    "conv_id_a",
                 )
-            cc_edges = cc_edges.localCheckpoint(eager=True)
-            cc_vertices = (
-                self.wh.read("clusters")
-                .select("conv_id")
-                .unionByName(batch_docs.select("conv_id"))
+                .join(
+                    texts.select(F.col("conv_id").alias("conv_id_b"), F.col("doc_sha").alias("sha_b"), F.col("norm_text").alias("tb")),
+                    "conv_id_b",
+                )
+                .where(F.col("sha_a") != F.col("sha_b"))
             )
+            # spread the CPU-bound scoring stage, keyed by conv_id_b so the
+            # scorer's set_seq2 reuse fires (see scoring.fuzzy_edges)
+            paired = paired.repartition(
+                paired.sparkSession.sparkContext.defaultParallelism, F.col("conv_id_b")
+            )
+            fuzzy = (
+                paired.withColumn("ratio", difflib_ratio_once(F.col("ta"), F.col("tb")))
+                .where(F.col("ratio") > F.lit(cfg.ratio_threshold))
+                .select(
+                    "conv_id_a",
+                    "conv_id_b",
+                    (F.col("ratio") * 100.0).alias("score"),
+                    F.lit("fuzzy").alias("method"),
+                )
+            )
+            new_edges = exact.unionByName(fuzzy)
 
-            def _recompute_full() -> None:
-                # bounded by the hybrid threshold: old_n < min_corpus rows,
-                # so the driver union-find path applies (≤100k edges checked
-                # inside connected_components; above it the distributed path
-                # still only reads the checkpoint)
-                self.wh.upsert_replace(
-                    "clusters",
-                    connected_components(
-                        cc_edges, vertices=cc_vertices, max_iterations=cfg.cc_max_iterations
-                    ),
+            # ---- J5: drop edges touching upstream-deleted conversations ---------
+            if tombstones is not None:
+                dead = tombstones.select("conv_id")
+                new_edges = new_edges.join(
+                    dead.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a", "left_anti"
+                ).join(dead.withColumnRenamed("conv_id", "conv_id_b"), "conv_id_b", "left_anti")
+            # lazy: the metric aggregate materializes the checkpoint — it MUST run
+            # before the edges merge rewrites the table this batch appends to (in
+            # overlap mode the scoring lineage reads only checkpoints, so the
+            # docs/reps/bands rewrites may already be in flight). The same
+            # aggregate also yields the edge-table bucket ids the edges merge
+            # will touch (fused, like the batch_docs aggregate above).
+            new_edges = new_edges.localCheckpoint(eager=False)
+            erow = new_edges.agg(
+                F.count(F.lit(1)).alias("n"), _b("conv_id_a").alias("eb")
+            ).collect()[0]
+            edge_buckets = list(erow["eb"])
+            metrics.record_count("ingest.new_edges", int(erow["n"]), wall_s=_lap())
+
+            # ---- full-recompute clusters swap, hoisted INTO the persist pool ----
+            # Below the hybrid threshold the cluster update is a full CC +
+            # clusters swap (see the growth section below). Its inputs are all
+            # available BEFORE the four state writes from pre-merge state:
+            #   edges    ≡ old edges table ∪ new_edges checkpoint (exactly what
+            #              the post-merge table will contain)
+            #   vertices ≡ old clusters conv_ids ∪ batch conv_ids (the clusters
+            #              table carries one row per corpus conversation — the
+            #              invariant both growth paths and the purge janitor
+            #              maintain)
+            # and the clusters table is the ONE table none of the four persists
+            # touches, so the whole recompute runs as a FIFTH concurrent task:
+            # batch wall = max(persists, clusters swap), not their sum. The old
+            # edge files are swapped by _persist_edges mid-pool, so the union is
+            # EAGERLY checkpointed first — every CC job then reads the
+            # checkpoint, never the live files.
+            if self.wh.exists("clusters"):
+                old_n = self.wh.get_meta("clusters", "n_rows")
+                if old_n is None:
+                    old_n = self.wh.read("clusters").count()
+            else:
+                old_n = -1
+            full_cc_in_pool = (
+                self.wh.exists("corpus_reps")
+                and 0 <= old_n < cfg.incremental_clusters_min_corpus
+            )
+            if full_cc_in_pool:
+                cc_edges = new_edges.select("conv_id_a", "conv_id_b")
+                if self.wh.exists("edges"):
+                    cc_edges = (
+                        self.wh.read("edges").select("conv_id_a", "conv_id_b").unionByName(cc_edges)
+                    )
+                cc_edges = cc_edges.localCheckpoint(eager=True)
+                cc_vertices = (
+                    self.wh.read("clusters")
+                    .select("conv_id")
+                    .unionByName(batch_docs.select("conv_id"))
                 )
 
-        if overlap:
-            # docs/reps/bands have been racing the scoring job since before
-            # difflib ran; only edges + the clusters swap remain to launch.
-            f_edges = pool_exec.submit(_persist_edges)
-            f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
-            stats = f_docs.result()
-            f_reps.result()
-            f_bands.result()
-            edge_stats = f_edges.result()
-            if f_clusters is not None:
-                f_clusters.result()
-            pool_exec.shutdown()
-        elif self.wh.exists("corpus_reps"):
-            from concurrent.futures import ThreadPoolExecutor
+                def _recompute_full() -> None:
+                    # bounded by the hybrid threshold: old_n < min_corpus rows,
+                    # so the driver union-find path applies (≤100k edges checked
+                    # inside connected_components; above it the distributed path
+                    # still only reads the checkpoint)
+                    self.wh.upsert_replace(
+                        "clusters",
+                        connected_components(
+                            cc_edges, vertices=cc_vertices, max_iterations=cfg.cc_max_iterations
+                        ),
+                    )
 
-            with ThreadPoolExecutor(max_workers=5) as pool:
-                f_docs = pool.submit(_persist_docs)
-                f_reps = pool.submit(_persist_reps)
-                f_bands = pool.submit(_persist_bands)
-                f_edges = pool.submit(_persist_edges)
-                f_clusters = pool.submit(_recompute_full) if full_cc_in_pool else None
+            if pool_exec is not None:
+                if not overlap:  # strict order: every write after scoring
+                    f_docs = pool_exec.submit(_persist_docs)
+                    f_reps = pool_exec.submit(_persist_reps)
+                    f_bands = pool_exec.submit(_persist_bands)
+                # in overlap mode docs/reps/bands have been racing the scoring
+                # job since before difflib ran; edges + the clusters swap remain
+                f_edges = pool_exec.submit(_persist_edges)
+                f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
                 stats = f_docs.result()
                 f_reps.result()
                 f_bands.result()
                 edge_stats = f_edges.result()
                 if f_clusters is not None:
                     f_clusters.result()
-        else:
-            # legacy warehouse without the reps index: the backfill seed
-            # reads the POST-merge corpus (a batch-only seed would make old
-            # shas look new to later probes and silently split their groups),
-            # so the docs merge must land first — sequential on this path.
-            stats = _persist_docs()
-            seed = (
-                self.wh.read("corpus_docs")
-                .groupBy("doc_sha")
-                .agg(F.min("conv_id").alias("rep"))
-            )
-            self.wh.upsert("corpus_reps", seed, key="doc_sha", n_buckets=cfg.warehouse_buckets)
-            _persist_bands()
-            edge_stats = _persist_edges()
+            else:
+                # legacy warehouse without the reps index: the backfill seed
+                # reads the POST-merge corpus (a batch-only seed would make old
+                # shas look new to later probes and silently split their groups),
+                # so the docs merge must land first — sequential on this path.
+                stats = _persist_docs()
+                seed = (
+                    self.wh.read("corpus_docs")
+                    .groupBy("doc_sha")
+                    .agg(F.min("conv_id").alias("rep"))
+                )
+                self.wh.upsert("corpus_reps", seed, key="doc_sha", n_buckets=cfg.warehouse_buckets)
+                _persist_bands()
+                edge_stats = _persist_edges()
+        finally:
+            if pool_exec is not None:
+                pool_exec.shutdown(wait=True, cancel_futures=True)
         metrics.record_count(
             "ingest.upsert_corpus_docs",
             stats["rows_written"] or 0,
@@ -537,7 +536,7 @@ class IncrementalPipeline:
         # table meta (Iceberg snapshot-summary analog), not a count() job per
         # batch: clusters carries exactly one row per corpus conversation
         # (vertices = all corpus docs in both paths), so the count advances by
-        # n_batch per batch and by −n_deleted per purge (recompute_clusters
+        # n_batch per batch and by −n_deleted per purge (the purge
         # re-seeds it). Legacy warehouses without the stat count once.
         # (old_n was resolved above the persist pool; the common full-
         # recompute case already ran there as the fifth concurrent task.)
@@ -616,80 +615,119 @@ class IncrementalPipeline:
 
         Exact-star healing: exact edges are STARS to the per-sha group min
         (process_batch), so deleting the rep would disconnect the surviving
-        copies — their only edges pointed at the deleted conv. Before the
-        delete, re-star every sha group that loses a member: emit edges from
-        each surviving member to the group's new min. Groups that lost no
-        member, or whose rep survives, get only duplicate pairs — deduped by
-        the edges MERGE. This keeps the reference's probe-all connectivity
-        (database.py:328-358) under TTL/tombstone churn."""
-        # materialize: the keys are derived from tables the deletes rewrite
-        dead = dead.select("conv_id").distinct().localCheckpoint(eager=True)
-        restar, dead_shas, new_reps, dead_bands = None, None, None, None
-        if self.wh.exists("corpus_bands") and self.wh.exists("corpus_docs"):
-            # corpus_bands is bucketed by band_hash — unprunable by conv_id
-            # directly. But the doomed rows' band keys are DETERMINISTIC in
-            # (stored norm_text, blocking config), so recompute them from the
-            # dead docs (one narrow Arrow pass over |dead| rows, read bucket-
-            # pruned by conv_id) and hand them to delete_keys as the prune
-            # hint: the delete then rewrites only the band_hash buckets that
-            # actually hold a doomed row — I/O ∝ dead set, not the bands
-            # table. (The pre-r3 shape was a full-table rewrite per purge.)
-            # Invariant this leans on: the warehouse's blocking config equals
-            # the ingest-time config — changing bands/rows_per_band/shingle_k
-            # mid-life requires rebuilding corpus_bands, whose stored rows
-            # would be stale for probes anyway.
-            dd, _ = self.wh.read_bucket_pruned("corpus_docs", dead, "conv_id")
-            dd = dd.join(dead, "conv_id", "left_semi")
-            dead_bands = (
-                with_bands(
-                    with_signature(dd, self.cfg).select("conv_id", "minhash"), self.cfg
-                )
-                .select("band_hash")
-                .distinct()
+        copies. Every sha group that loses a member is re-starred: edges from
+        each survivor to the group's new min, and its ``corpus_reps`` row
+        re-pointed at it (groups whose rep survives get only existing pairs).
+        This keeps the reference's probe-all connectivity
+        (database.py:328-358) under TTL/tombstone churn.
+
+        One plan, at the job floor: the inputs of every rewrite are
+        materialized first; then the five tables are rewritten concurrently,
+        each by ONE staged write (delete and re-insert folded together), none
+        reading a table another task swaps. Only ids stored in
+        ``corpus_docs`` can appear in the other tables, so a purge matching
+        no stored doc writes nothing."""
+        wh, cfg = self.wh, self.cfg
+        if not wh.exists("corpus_docs"):
+            return 0
+        _b, _tb = self._bucket_set, self._touched_if_layout_matches
+        # materialize: the keys may derive from tables the rewrites swap (no
+        # distinct: every use is a semi/anti join or a bucket-id set)
+        dead = dead.select("conv_id").localCheckpoint(eager=False)
+        conv_buckets = list(dead.agg(_b("conv_id")).collect()[0][0])
+        # The dead docs' band rows, one per (doc, band). corpus_bands is
+        # bucketed by band_hash — unprunable by conv_id — but the doomed
+        # rows' band keys are DETERMINISTIC in (stored norm_text, blocking
+        # config), so one narrow Arrow pass over the dead docs recomputes them
+        # and the bands delete rewrites only the buckets holding a doomed row.
+        # The rows carry doc_sha too, so finding the affected sha groups
+        # scans no corpus. Invariant: the blocking config equals the
+        # ingest-time config (changing it mid-life requires rebuilding
+        # corpus_bands, whose stored rows would be stale for probes anyway).
+        dd, _ = wh.read_bucket_pruned(
+            "corpus_docs", dead, "conv_id", touched=_tb("corpus_docs", conv_buckets)
+        )
+        sig = with_signature(dd.join(dead, "conv_id", "left_semi"), cfg)
+        dead_rows = (
+            with_bands(sig.select("conv_id", "doc_sha", "minhash"), cfg)
+            .select("doc_sha", "band_hash")
+            .localCheckpoint(eager=False)
+        )
+        drow = dead_rows.agg(
+            F.count(F.lit(1)).alias("n"), _b("doc_sha").alias("sb"), _b("band_hash").alias("bb")
+        ).collect()[0]
+        if not drow["n"]:
+            return 0
+        dead_shas = dead_rows.select("doc_sha").distinct()
+        # surviving members of the affected sha groups, each with the group's
+        # new rep (its min conv_id): they give the re-star edges and the new
+        # corpus_reps rows
+        members = (
+            wh.read("corpus_docs")
+            .select("conv_id", "doc_sha")
+            .join(dead_shas, "doc_sha", "left_semi")
+            .join(dead, "conv_id", "left_anti")
+            .withColumn("rep", F.min("conv_id").over(Window.partitionBy("doc_sha")))
+            .localCheckpoint(eager=True)
+        )
+        restar = members.where(F.col("conv_id") != F.col("rep")).select(
+            F.col("rep").alias("conv_id_a"),
+            F.col("conv_id").alias("conv_id_b"),
+            F.lit(100.0).alias("score"),
+            F.lit("exact").alias("method"),
+        )
+        pair = ["conv_id_a", "conv_id_b"]
+        edges = None
+        if wh.exists("edges"):
+            # the post-purge edge set, from the pre-delete table: feeds both
+            # the edges rewrite and the clusters recompute
+            old = wh.read("edges")
+            edges = (
+                old.join(dead.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a", "left_anti")
+                .join(dead.withColumnRenamed("conv_id", "conv_id_b"), "conv_id_b", "left_anti")
+                .join(restar.select(*pair), pair, "left_anti")
+                .unionByName(restar)
+                .select(*old.columns)
                 .localCheckpoint(eager=True)
             )
-        if self.wh.exists("corpus_docs"):
-            docs = self.wh.read("corpus_docs").select("conv_id", "doc_sha")
-            dead_shas = (
-                docs.join(dead, "conv_id", "left_semi")
-                .select("doc_sha")
-                .distinct()
-                .localCheckpoint(eager=True)
+
+        with ThreadPoolExecutor(max_workers=5) as pool:
+            f_docs = pool.submit(
+                wh.delete_keys, "corpus_docs", dead, "conv_id", touched=_tb("corpus_docs", conv_buckets)
             )
-            survivors = docs.join(dead, "conv_id", "left_anti").join(
-                dead_shas, "doc_sha", "left_semi"
-            )
-            new_reps = survivors.groupBy("doc_sha").agg(
-                F.min("conv_id").alias("rep")
-            ).localCheckpoint(eager=True)
-            if self.wh.exists("edges"):
-                restar = (
-                    survivors.join(new_reps, "doc_sha")
-                    .where(F.col("conv_id") != F.col("rep"))
-                    .select(
-                        F.col("rep").alias("conv_id_a"),
-                        F.col("conv_id").alias("conv_id_b"),
-                        F.lit(100.0).alias("score"),
-                        F.lit("exact").alias("method"),
-                    )
-                    .localCheckpoint(eager=True)  # compute BEFORE the rewrites below
-                )
-        n = self.wh.delete_keys("corpus_docs", dead, "conv_id")
-        if self.wh.exists("corpus_bands"):
-            self.wh.delete_keys("corpus_bands", dead, "conv_id", prune_hint=dead_bands)
-        if self.wh.exists("edges"):
-            self.wh.delete_keys("edges", dead, ["conv_id_a", "conv_id_b"])
-            if restar is not None:
-                self.wh.upsert("edges", restar, key=["conv_id_a", "conv_id_b"])
-        # corpus_reps maintenance: affected shas drop their (possibly dead)
-        # rep row, then surviving groups re-point at their new min — keeping
-        # the index exactly in sync with the re-star edges above
-        if self.wh.exists("corpus_reps") and dead_shas is not None:
-            self.wh.delete_keys("corpus_reps", dead_shas, "doc_sha")
-            self.wh.upsert("corpus_reps", new_reps.select("doc_sha", "rep"), key="doc_sha")
-        if n and self.wh.exists("clusters"):
-            self.recompute_clusters()
-        return n
+            futures = [f_docs]
+            if wh.exists("corpus_bands"):
+                futures.append(pool.submit(
+                    wh.delete_keys, "corpus_bands", dead, "conv_id",
+                    prune_hint=dead_rows.select("band_hash"), touched=_tb("corpus_bands", list(drow["bb"])),
+                ))
+            if wh.exists("corpus_reps"):
+                # the affected shas' rows out, their surviving groups' new reps in
+                futures.append(pool.submit(
+                    wh.delete_keys, "corpus_reps", dead_shas, "doc_sha",
+                    touched=_tb("corpus_reps", list(drow["sb"])),
+                    insert=members.where(F.col("conv_id") == F.col("rep")).select("doc_sha", "rep"),
+                ))
+            if edges is not None:
+                futures.append(pool.submit(wh.upsert_replace, "edges", edges))
+            if wh.exists("clusters"):
+                # the clusters table carries one row per stored conv, and no
+                # other task touches it: its surviving rows are the vertices
+                vertices = wh.read("clusters").select("conv_id").join(dead, "conv_id", "left_anti")
+                cc_edges = edges if edges is not None else restar.limit(0)
+                futures.append(pool.submit(self._replace_clusters, cc_edges, vertices))
+            for f in futures:
+                f.result()
+        return f_docs.result()
+
+    def _replace_clusters(self, edges: DataFrame, vertices: DataFrame) -> None:
+        """CC over ``edges`` ∪ ``vertices`` → swap ``clusters``, and re-seed
+        its maintained row count (one row per stored conv) from the written
+        files' footers."""
+        clusters = connected_components(
+            edges, vertices=vertices, max_iterations=self.cfg.cc_max_iterations
+        )
+        self.wh.set_meta("clusters", "n_rows", self.wh.upsert_replace("clusters", clusters))
 
     def recompute_clusters(self) -> DataFrame:
         """CC over the surviving edges ∪ surviving vertices → overwrite
@@ -698,15 +736,7 @@ class IncrementalPipeline:
         edges = self.edges()
         if edges is None:
             edges = self.wh.spark.createDataFrame([], "conv_id_a string, conv_id_b string, score double, method string")
-        clusters = connected_components(
-            edges,
-            vertices=self.wh.read("corpus_docs").select("conv_id"),
-            max_iterations=self.cfg.cc_max_iterations,
-        )
-        self.wh.upsert_replace("clusters", clusters)
-        # re-seed the maintained row count (one row per surviving corpus conv;
-        # purges are rare relative to batches, so one count here is fine)
-        self.wh.set_meta("clusters", "n_rows", self.wh.read("clusters").count())
+        self._replace_clusters(edges, self.wh.read("corpus_docs").select("conv_id"))
         return self.wh.read("clusters")
 
     def retention_sweep(self, now=None) -> int:

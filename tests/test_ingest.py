@@ -3,6 +3,8 @@ tombstone purge, idempotent re-sweep (reference ST4/ST5)."""
 
 from __future__ import annotations
 
+import hashlib
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -343,3 +345,198 @@ def test_incremental_cluster_update_matches_full_recompute(spark, tmp_path):
     assert got_i == {
         "c_a": "c_a", "d_b": "c_a", "e_c": "c_a", "x_1": "x_1", "y_2": "x_1",
     }
+
+
+# ---- purge: pinned post-purge state, delete_keys, job budget ---------------
+def _table_hash(wh, table) -> str:
+    """Order-insensitive hash of a table's rows (columns sorted by name)."""
+    df = wh.read(table)
+    rows = sorted(repr(tuple(str(v) for v in r)) for r in df.select(sorted(df.columns)).collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+
+STATE_TABLES = ("corpus_docs", "corpus_bands", "edges", "corpus_reps", "clusters")
+
+
+def _purge_fixture(spark, root) -> IncrementalPipeline:
+    """A two-batch warehouse with one exact group whose rep is purged, one
+    exact pair losing its non-rep member, a fuzzy pair, and singletons."""
+    pipe = IncrementalPipeline(Warehouse(spark, root), PipelineConfig())
+    other = ["entirely different content in this conversation " * 4, "another reply " * 6]
+    third = ["a third topic that shares nothing with the others " * 4, "short answer " * 7]
+    fuzzy = [BASE[0], "a completely different second turn with fresh content " * 3]
+    b1 = (
+        _conv("a_rep", BASE) + _conv("b_cp1", BASE, ts=TS + timedelta(hours=1))
+        + _conv("x_one", other) + _conv("y_one", third) + _conv("z_fz", fuzzy)
+    )
+    day = TS + timedelta(days=1)
+    b2 = _conv("c_cp2", BASE, ts=day) + _conv("x_two", other, ts=day) + _conv("s_solo", ["solo " * 30], ts=day)
+    pipe.process_batch(_turns(spark, b1))
+    pipe.process_batch(_turns(spark, b2))
+    return pipe
+
+
+def test_purge_pins_post_purge_state(spark, tmp_path):
+    """The purge's end state, table by table, is pinned by sorted-row hashes
+    recorded before the purge's writes were restructured."""
+    pipe = _purge_fixture(spark, str(tmp_path / "wh_pin"))
+    dead = spark.createDataFrame([(c,) for c in ("a_rep", "x_two", "y_one", "never_stored")], "conv_id string")
+    assert pipe.purge_deleted(dead) == 3
+    got = {t: _table_hash(pipe.wh, t) for t in STATE_TABLES}
+    assert got == {
+        "corpus_docs": "3a773a5b0825fe73",
+        "corpus_bands": "726712d7c64c124d",
+        "edges": "89aca52a258fd9d9",
+        "corpus_reps": "5a8e095f4acc13f4",
+        "clusters": "f8771263d38c0793",
+    }
+    assert pipe.wh.get_meta("clusters", "n_rows") == pipe.wh.read("clusters").count() == 5
+
+
+def _bucket_listing(wh, table) -> dict:
+    path = wh._path(table)
+    return {d: sorted(os.listdir(os.path.join(path, d))) for d in os.listdir(path) if d.startswith("_bucket=")}
+
+
+def test_delete_keys_staged_known_answer(spark, tmp_path):
+    """delete_keys returns the rows it removed (footer counts), drops the
+    buckets it empties, leaves untouched buckets' files alone, discards a
+    write that matched nothing, and keeps a fully emptied table readable."""
+    wh = Warehouse(spark, str(tmp_path / "wh_dk"))
+    rows = spark.createDataFrame([(f"k{i:03d}", i) for i in range(64)], "k string, v long")
+    wh.upsert("t", rows, key="k", n_buckets=8)
+    bucket = {
+        r.k: r.b for r in rows.select("k", F.pmod(F.xxhash64("k"), F.lit(8)).alias("b")).collect()
+    }
+    target = bucket["k000"]
+    other = next(k for k in sorted(bucket) if bucket[k] != target)
+    doomed = sorted(k for k, b in bucket.items() if b == target) + [other]
+    before = _bucket_listing(wh, "t")
+    n = wh.delete_keys("t", spark.createDataFrame([(k,) for k in doomed], "k string"), "k")
+    assert n == len(doomed)
+    after = _bucket_listing(wh, "t")
+    assert f"_bucket={target}" not in after  # emptied bucket dropped
+    rewritten = {f"_bucket={target}", f"_bucket={bucket[other]}"}
+    assert {d: f for d, f in after.items() if d not in rewritten} == {
+        d: f for d, f in before.items() if d not in rewritten
+    }
+    assert wh.read("t").count() == 64 - len(doomed)
+
+    # no-op deletes, pruned and full-table: the file set is unchanged
+    snap = _bucket_listing(wh, "t")
+    assert wh.delete_keys("t", spark.createDataFrame([("nope",)], "k string"), "k") == 0
+    assert wh.delete_keys("t", spark.createDataFrame([(999,)], "v long"), "v") == 0
+    assert _bucket_listing(wh, "t") == snap
+
+    # full-table branch (not the bucket key)
+    vs = sorted(r.v for r in wh.read("t").collect())[:2]
+    assert wh.delete_keys("t", spark.createDataFrame([(v,) for v in vs], "v long"), "v") == 2
+    left = 64 - len(doomed) - 2
+    assert wh.read("t").count() == left
+
+    # delete_where: the same staged rewrite, a predicate matching nothing is a no-op
+    snap = _bucket_listing(wh, "t")
+    assert wh.delete_where("t", F.col("v") > 1000) == 0
+    assert _bucket_listing(wh, "t") == snap
+    assert wh.delete_where("t", F.col("v") == min(r.v for r in wh.read("t").collect())) == 1
+    left -= 1
+    assert wh.read("t").count() == left
+
+    # deleting everything: no bucket left, the meta schema reads it back
+    assert wh.delete_keys("t", wh.read("t").select("k").localCheckpoint(), "k") == left
+    assert _bucket_listing(wh, "t") == {}
+    assert wh.read("t").count() == 0 and wh.read("t").columns == ["k", "v"]
+
+
+def test_staged_swap_rejects_rows_outside_touched(spark, tmp_path):
+    """A merge whose rows hash outside the caller's ``touched`` list raises
+    before any bucket is swapped: the table keeps every row."""
+    wh = Warehouse(spark, str(tmp_path / "wh_stray"))
+    rows = spark.createDataFrame([(f"k{i:03d}", 1) for i in range(32)], "k string, v long")
+    wh.upsert("t", rows, key="k", n_buckets=8)
+    b = rows.where(F.col("k") == "k005").select(F.pmod(F.xxhash64("k"), F.lit(8))).first()[0]
+    snap = _bucket_listing(wh, "t")
+    inc = spark.createDataFrame([("k005", 2)], "k string, v long")
+    with pytest.raises(ValueError, match="outside the rewrite"):
+        wh.upsert("t", inc, key="k", touched=[(b + 1) % 8])
+    with pytest.raises(ValueError, match="outside the rewrite"):
+        wh.delete_keys("t", inc.select("k"), "k", touched=[(b + 1) % 8], insert=inc)
+    assert _bucket_listing(wh, "t") == snap
+    assert wh.read("t").where(F.col("v") == 1).count() == 32
+    assert not [d for d in os.listdir(wh.root) if d.startswith("_staging_")]
+
+
+#: jobs one purge of the fixture may launch: the staged, concurrent plan
+#: launches 44 on a local[4] session, the sequential plan before it 106
+PURGE_JOB_BUDGET = 50
+
+
+def test_purge_job_budget(spark, tmp_path):
+    """The purge's Spark job count stays under a fixed budget, so the job
+    floor cannot creep back. Jobs launched from the purge's pool threads
+    carry no job group either, so they are counted too."""
+    pipe = _purge_fixture(spark, str(tmp_path / "wh_budget"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    dead = spark.createDataFrame([(c,) for c in ("a_rep", "x_two", "y_one")], "conv_id string")
+    assert pipe.purge_deleted(dead) == 3
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert 0 < len(jobs) <= PURGE_JOB_BUDGET
+
+
+def test_metrics_rows_readable_beside_spark_files(spark, pipe):
+    """A tick's _metrics rows (written through pyarrow) read back through
+    Spark next to a Spark-written file, under the one schema."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("run_id", T.StringType()),
+            T.StructField("stage", T.StringType()),
+            T.StructField("wall_s", T.DoubleType()),
+            T.StructField("rows_out", T.LongType()),
+            T.StructField("extra", T.StringType()),
+            T.StructField("recorded_at", T.DoubleType()),
+        ]
+    )
+    spark.createDataFrame([("spark_run", "old.stage", None, 7, "{}", 1.0)], schema).write.mode(
+        "append"
+    ).parquet(pipe.wh._path("_metrics"))
+    pipe.process_batch(_turns(spark, _conv("c_m", BASE)))
+    m = pipe.wh.read("_metrics")
+    assert [(f.name, f.dataType) for f in m.schema] == [(f.name, f.dataType) for f in schema]
+    rows = m.collect()
+    assert {r.run_id for r in rows if r.stage == "old.stage"} == {"spark_run"}
+    tick = [r for r in rows if r.run_id != "spark_run"]
+    assert {"ingest.batch_docs", "ingest.new_edges", "ingest.batch"} <= {r.stage for r in tick}
+    assert [r.rows_out for r in tick if r.stage == "ingest.batch_docs"] == [1]
+
+
+def test_failed_scoring_leaves_no_table_write_running(spark, pipe, monkeypatch):
+    """A scoring job that fails while the overlap pool's table writes are in
+    flight: process_batch raises only after every write has finished."""
+    import time
+
+    from repostcheckerbot_spark.operators import ingest
+
+    pipe.process_batch(_turns(spark, _conv("c_a", BASE)))
+    calls = []
+    orig = Warehouse.upsert
+
+    def slow_upsert(self, *a, **kw):
+        t0 = time.time()
+        time.sleep(1.5)
+        try:
+            return orig(self, *a, **kw)
+        finally:
+            calls.append((t0, time.time()))
+
+    monkeypatch.setattr(Warehouse, "upsert", slow_upsert)
+    monkeypatch.setattr(
+        ingest, "difflib_ratio_once", lambda a, b: F.raise_error(F.lit("injected scoring failure")).cast("double")
+    )
+    mutated = [BASE[0], "a completely different second turn with fresh content " * 3]
+    with pytest.raises(Exception, match="injected scoring failure"):
+        pipe.process_batch(_turns(spark, _conv("c_b", mutated, ts=TS + timedelta(days=2))))
+    raised = time.time()
+    assert calls and all(end <= raised for _, end in calls)
