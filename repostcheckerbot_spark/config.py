@@ -55,10 +55,6 @@ class PipelineConfig:
     #: by the exact sha path, and uncapped they produce O(s²) pairs (skew).
     max_band_bucket: int = 64
 
-    # --- scoring -----------------------------------------------------------
-    #: max candidate pairs scored per Arrow batch (memory bound for the UDF).
-    score_batch_size: int = 2_000
-
     # --- incremental clustering -------------------------------------------
     #: corpus size (clusters rows) above which process_batch switches from
     #: full-recompute CC to the incremental affected-component update. The
@@ -69,16 +65,11 @@ class PipelineConfig:
     incremental_clusters_min_corpus: int = 200_000
 
     # --- clustering --------------------------------------------------------
-    #: checkpoint every N star-contraction rounds to cut lineage.
-    cc_checkpoint_interval: int = 1
     #: hard cap on star-contraction rounds (converges in O(log n); 50 is a
     #: runaway backstop, not a tuning knob).
     cc_max_iterations: int = 50
 
     # --- placement ---------------------------------------------------------
-    #: where checkpoints / metrics / corpus state land (parquet layout; the
-    #: writer interface is Iceberg-shaped so swapping the catalog in is local).
-    warehouse_dir: str = "/tmp/rcb_spark_warehouse"
     #: corpus_docs is hash-bucketed by conv_id into this many partitions so
     #: an incremental MERGE rewrites only touched buckets (I/O ∝ batch, not
     #: corpus). At cluster scale this is Iceberg ``bucket(conv_id, N)`` with

@@ -4,13 +4,11 @@ This replaces the reference's O(N²) fuzzy scan — a per-record full-corpus
 Python loop (/root/reference/database.py:389-405 and media twins at
 :445-460,:533-548,:588-603,:634-647) — with the standard scale-out rewrite:
 
-  1. character ``k``-shingles of the whitespace-stripped document
-     (native ``transform(sequence(...), i -> substring(...))`` — JVM-side,
-     whole-stage-codegen, no Python);
-  2. MinHash signature: ``num_hashes`` independent hash functions simulated as
-     ``xxhash64(seed_i || shingle)``, each minimized over the shingle set —
-     again a single native expression (nested higher-order functions), zero
-     shuffles per row;
+  1. character ``k``-shingles of the whitespace-stripped document, hashed to
+     64 bits by a vectorized numpy k-gram hasher;
+  2. one-permutation MinHash (OPH, densified) over those hashes — steps 1
+     and 2 are ONE Arrow-batched pandas UDF (``with_signature``): only
+     strings cross the JVM↔Python boundary, never per-shingle arrays;
   3. LSH banding: the signature is cut into ``bands`` bands of
      ``rows_per_band`` hashes; each band hashes to one bucket key;
   4. candidates = self-join on ``(block_cols…, band_id, band_hash)`` with
@@ -21,7 +19,8 @@ Python loop (/root/reference/database.py:389-405 and media twins at
 Skew: a band bucket of size s yields s·(s−1)/2 pairs. Very large buckets are
 (a) overwhelmingly exact-duplicate groups, which the sha fast path (J2)
 already catches, and (b) the classic LSH skew bomb at 100 TB. Buckets larger
-than ``max_band_bucket`` are therefore capped: we keep a deterministic sample
+than ``max_band_bucket`` are therefore capped (``cap_band_pool``, shared by
+the batch self-join and the incremental probe): we keep a deterministic sample
 (the ``max_band_bucket`` smallest conv_ids) and COUNT the capped bucket in the
 metrics output — never a silent drop. AQE skew-join splitting handles residual
 imbalance at shuffle time.
@@ -35,7 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,30 +84,6 @@ def _kgram_hashes(text: str, k: int) -> np.ndarray:
     return h
 
 
-def with_shingles(docs: DataFrame, cfg: PipelineConfig, text_col: str = "norm_text") -> DataFrame:
-    """Add ``shingle_hashes: array<bigint>`` — 64-bit hash of every character
-    k-shingle (duplicates kept: min() ignores them), via the vectorized
-    k-gram hasher in an Arrow-batched pandas UDF.
-
-    (A JVM-native ``transform(sequence…, xxhash64(substring…))`` variant was
-    benchmarked first: higher-order functions are interpreted per element in
-    Spark, costing ~60 s for 51k docs; the numpy path is ~30× faster and ships
-    only strings over Arrow, not 8-byte-per-shingle arrays.)
-    """
-    k = cfg.shingle_k
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def shingle_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _kgram_hashes(t, k).astype(np.int64) if t else np.zeros(0, dtype=np.int64)
-                for t in texts
-            ]
-        )
-
-    return docs.withColumn("shingle_hashes", shingle_udf(F.col(text_col)))
-
-
 def _oph_signature(hv: np.ndarray, num_hashes: int) -> np.ndarray:
     """One-permutation MinHash with rotation densification (Li/Owen/Zhang,
     NIPS'12; Shrivastava's densified variant — public algorithms): shingle
@@ -130,25 +105,6 @@ def _oph_signature(hv: np.ndarray, num_hashes: int) -> np.ndarray:
         donor = filled[pos % len(filled)]
         sig = np.where(empty, sig[donor] + (idx - donor).astype(np.uint64), sig)
     return sig.astype(np.int64)
-
-
-def with_minhash(docs_with_shingles: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Add ``minhash: array<bigint>`` of length cfg.num_hashes (OPH over the
-    ``shingle_hashes`` column; see _oph_signature)."""
-    num_hashes = cfg.num_hashes
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(hashes: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _oph_signature(np.asarray(h, dtype=np.int64).astype(np.uint64), num_hashes)
-                if h is not None and len(h)
-                else np.zeros(num_hashes, dtype=np.int64)
-                for h in hashes
-            ]
-        )
-
-    return docs_with_shingles.withColumn("minhash", minhash_udf(F.col("shingle_hashes")))
 
 
 def with_signature(docs: DataFrame, cfg: PipelineConfig, text_col: str = "norm_text") -> DataFrame:
@@ -194,6 +150,24 @@ def with_bands(docs_with_minhash: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ).drop("band")
 
 
+def cap_band_pool(slim: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Deterministic band-bucket cap: keep the ``max_band_bucket`` smallest
+    conv_ids of every ``(block_cols…, band_id, band_hash)`` bucket.
+
+    The result keeps the bucket key and ``conv_id`` of ``slim`` and adds
+    ``_rn`` (rank by conv_id in the bucket) and ``_sz`` (the PRE-cap bucket
+    size), so the ``_rn == 1`` row of a bucket reports its size and whether
+    it was capped. One window pass, partitioned on the bucket key."""
+    key = [*cfg.block_cols, "band_id", "band_hash"]
+    w = Window.partitionBy(*key)
+    return slim.select(
+        *key,
+        "conv_id",
+        F.row_number().over(w.orderBy("conv_id")).alias("_rn"),
+        F.count(F.lit(1)).over(w).alias("_sz"),
+    ).where(F.col("_rn") <= cfg.max_band_bucket)
+
+
 def candidate_pairs(
     banded: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
@@ -206,29 +180,16 @@ def candidate_pairs(
                        required explicit by the north rule.
     """
     key = [*cfg.block_cols, "band_id", "band_hash"]
-    slim = banded.select(*key, "conv_id")
-
-    # deterministic cap: keep the max_band_bucket smallest conv_ids per bucket.
     # Shape matters MORE than operator count: the self-join below must shuffle
-    # on ``key`` anyway, so ranking with a window PARTITIONED ON THE JOIN KEY
-    # rides that same exchange — the sort is nearly free and, because both
-    # join sides are the identical subplan, ReuseExchange computes the
-    # signature UDF exactly once. (An r2 variant replaced the window with a
+    # on ``key`` anyway, so the cap window, PARTITIONED ON THE JOIN KEY, rides
+    # that same exchange — the sort is nearly free and, because both join
+    # sides are the identical subplan, ReuseExchange computes the signature
+    # UDF exactly once. (An r2 variant replaced the window with a
     # sizes-aggregate + broadcast anti/semi + union to avoid the sort; it
     # broke exchange reuse, recomputed the UDF per branch, and regressed the
     # flagship ~48% — reverted, with the bucket size now computed inside the
     # SAME window pass so the skew metrics cost no extra aggregation.)
-    from pyspark.sql import Window
-
-    w_rank = Window.partitionBy(*key).orderBy("conv_id")
-    w_size = Window.partitionBy(*key)
-    ranked = slim.select(
-        *key,
-        "conv_id",
-        F.row_number().over(w_rank).alias("_rn"),
-        F.count(F.lit(1)).over(w_size).alias("_sz"),
-    )
-    capped = ranked.where(F.col("_rn") <= cfg.max_band_bucket)
+    capped = cap_band_pool(banded, cfg)
     # over-cap buckets: one row each (the _rn==1 representative carries the
     # full pre-cap size) — derived from `capped`, so any persist of the
     # candidate frame covers the metrics too.
@@ -257,86 +218,6 @@ def candidate_pairs(
         .dropDuplicates(["conv_id_a", "conv_id_b"])
     )
     return pairs, bucket_metrics
-
-
-def blocklocal_candidates(docs: DataFrame, cfg: PipelineConfig, max_block: int = 1_000) -> tuple[DataFrame, DataFrame]:
-    """Hybrid candidate generator: grouped ``applyInPandas`` block-local
-    pairing for SMALL blocks, LSH banding only for the big ones.
-
-    Rationale: the composite block key (tool, role_sig) is a strong splitter —
-    most blocks hold a handful of conversations. For a block of size s ≤
-    max_block, enumerating all s·(s−1)/2 pairs in one Arrow group is cheaper
-    than paying ``bands`` band rows per doc plus a banded self-join, and has
-    recall 1.0 within the block by construction. Blocks larger than
-    ``max_block`` (where all-pairs is quadratic poison) route through the
-    banded-LSH path unchanged. Candidate semantics stay a SUPERSET of
-    generate_candidates on the small blocks, identical on the big ones —
-    the fuzzy scorer downstream is the same.
-
-    Returns (pairs, bucket_metrics) like generate_candidates. The split
-    itself is one window count over the block key — same partitioning as the
-    grouped apply, one exchange total.
-    """
-    from pyspark.sql import Window
-
-    key = list(cfg.block_cols)
-    # one window pass computes the split; LAZY checkpoint so the split frame
-    # (and the assembly groupBy underneath it) materializes once even though
-    # three consumers follow (the emptiness probe, small, big) — without it
-    # the probe's `limit(1).count()` was a full extra job per call.
-    sized = docs.withColumn(
-        "_blk_sz", F.count(F.lit(1)).over(Window.partitionBy(*key))
-    ).localCheckpoint(eager=False)
-    small = sized.where(F.col("_blk_sz") <= max_block).select(*key, "conv_id")
-    big = sized.where(F.col("_blk_sz") > max_block).drop("_blk_sz")
-
-    # schemas DERIVE from the input frame: block cols keep their real types
-    # (role_sig is bigint in the production DOC_COLS shape — hardcoding
-    # `string` made Arrow reject the int64 column at eval time).
-    in_fields = {f.name: f for f in docs.schema.fields}
-    id_type = in_fields["conv_id"].dataType
-    out_schema = T.StructType(
-        [T.StructField(c, in_fields[c].dataType, in_fields[c].nullable) for c in key]
-        + [T.StructField("conv_id_a", id_type, False), T.StructField("conv_id_b", id_type, False)]
-    )
-    metrics_schema = T.StructType(
-        [T.StructField(c, in_fields[c].dataType, in_fields[c].nullable) for c in key]
-        + [
-            T.StructField("band_id", T.IntegerType(), False),
-            T.StructField("band_hash", T.LongType(), False),
-            T.StructField("bucket_size", T.LongType(), False),
-            T.StructField("kept", T.IntegerType(), False),
-        ]
-    )
-
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = sorted(pdf["conv_id"].tolist())
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame(columns=[*key, "conv_id_a", "conv_id_b"])
-        head = {c: pdf[c].iloc[0] for c in key}
-        a, b = zip(*[(ids[i], ids[j]) for i in range(n) for j in range(i + 1, n)])
-        out = pd.DataFrame({"conv_id_a": a, "conv_id_b": b})
-        for c in key:
-            out[c] = head[c]
-        return out[[*key, "conv_id_a", "conv_id_b"]]
-
-    small_pairs = small.groupBy(*key).applyInPandas(_pairs, schema=out_schema)
-    # plan-shape probe: does ANY block exceed max_block? One max-aggregate over
-    # the checkpointed split frame — this is the action that materializes the
-    # checkpoint anyway, so the probe is fused with work that had to happen
-    # (the previous `big.limit(1).count()` shape planned a LocalLimit +
-    # single-partition GlobalLimit exchange on top of the same scan).
-    max_blk = sized.agg(F.max("_blk_sz")).collect()[0][0] or 0
-    big_pairs, bucket_metrics = (
-        generate_candidates(big, cfg)
-        if max_blk > max_block  # skip the whole LSH subplan when no big blocks
-        else (
-            docs.sparkSession.createDataFrame([], out_schema),
-            docs.sparkSession.createDataFrame([], metrics_schema),
-        )
-    )
-    return small_pairs.unionByName(big_pairs), bucket_metrics
 
 
 def sorted_neighborhood_pairs(
@@ -383,8 +264,6 @@ def sorted_neighborhood_pairs(
         if num_partitions
         else slim.repartitionByRange(*keys)
     )
-    from pyspark.sql import Window
-
     part = base.withColumn("_pid", F.spark_partition_id())
     local = part.withColumn(
         "_lr", F.row_number().over(Window.partitionBy("_pid").orderBy(*keys))

@@ -43,10 +43,10 @@ from pyspark.sql import functions as F
 
 from repostcheckerbot_spark.config import PipelineConfig
 from repostcheckerbot_spark.operators.assembly import assemble_docs
-from repostcheckerbot_spark.operators.blocking import with_bands, with_signature
+from repostcheckerbot_spark.operators.blocking import cap_band_pool, with_bands, with_signature
 from repostcheckerbot_spark.operators.clustering import connected_components
 from repostcheckerbot_spark.operators.retention import apply_ingest_gate, within_retention
-from repostcheckerbot_spark.operators.scoring import difflib_ratio_once
+from repostcheckerbot_spark.operators.scoring import fuzzy_edges, star_edges
 from repostcheckerbot_spark.sinks.state import MetricsSink, Warehouse
 
 DOC_COLS = ["conv_id", "doc_sha", "norm_text", "role_sig", "tool", "first_ts", "n_turns"]
@@ -88,6 +88,12 @@ class IncrementalPipeline:
         now=None,
     ) -> dict[str, DataFrame]:
         cfg = self.cfg
+        if self.wh.exists("corpus_docs") and not self.wh.exists("corpus_reps"):
+            # the exact probe reads reps only from the corpus_reps index, which
+            # every tick and purge maintains beside corpus_docs
+            raise ValueError(
+                "warehouse has corpus_docs but no corpus_reps index; rebuild it before ingesting"
+            )
         metrics = MetricsSink(self.wh)
         t0 = time.monotonic()
 
@@ -147,10 +153,10 @@ class IncrementalPipeline:
         # The r1 cut joined batch sha against (corpus ∪ batch): one edge per
         # STORED COPY, so a probe matching a viral duplicate group of 10⁶
         # copies emitted 10⁶ edges — the exact quadratic skew the batch path's
-        # exact_edges star rewrite (scoring.py:45) avoids. Instead, join each
-        # batch doc to ONE representative per sha: the corpus group min when
-        # the sha is already stored (every stored copy is already connected to
-        # it, inductively), else the batch-local min. O(batch) edges; the
+        # star (scoring.exact_edges) avoids. Instead, join each batch doc to
+        # ONE representative per sha: the corpus group min when the sha is
+        # already stored (every stored copy is already connected to it,
+        # inductively), else the batch-local min. O(batch) edges; the
         # connected components are identical.
         # The corpus-side rep lookup is the maintained ``corpus_reps`` index
         # (doc_sha → group rep, hash-bucketed by doc_sha): the probe reads
@@ -158,9 +164,8 @@ class IncrementalPipeline:
         # r3-pre shape re-aggregated ALL of corpus_docs every micro-batch.
         # The invariant the star argument needs is "every stored copy of a
         # sha is connected to reps[sha]" — maintained below (persist section)
-        # and under purges (_purge_keys re-star). Legacy warehouses without
-        # the index fall back to the corpus aggregation once; the upsert
-        # below creates the index for subsequent batches.
+        # and under purges (_purge_keys re-star). A fresh warehouse's reps are
+        # the batch-local mins; the reps merge below creates the index.
         probe = batch_docs.select("conv_id", "doc_sha")
         batch_reps = probe.groupBy("doc_sha").agg(F.min("conv_id").alias("brep"))
         if self.wh.exists("corpus_reps"):
@@ -175,34 +180,15 @@ class IncrementalPipeline:
             reps = batch_reps.join(crep, "doc_sha", "left").select(
                 "doc_sha", F.coalesce("crep", "brep").alias("rep")
             )
-        elif self.wh.exists("corpus_docs"):
-            corpus_reps = (
-                self.wh.read("corpus_docs")
-                .select("conv_id", "doc_sha")
-                .groupBy("doc_sha")
-                .agg(F.min("conv_id").alias("crep"))
-            )
-            reps = batch_reps.join(corpus_reps, "doc_sha", "left").select(
-                "doc_sha", F.coalesce("crep", "brep").alias("rep")
-            )
         else:
             reps = batch_reps.select("doc_sha", F.col("brep").alias("rep"))
         # reps feeds the exact star edges AND the corpus_reps merge; the lazy
         # checkpoint cuts the corpus_reps-file lineage so the overlap plan
         # below can rewrite the table while the scoring job still runs
-        # (non-overlap paths: the new_edges aggregate materializes it).
+        # (strict order: the new_edges aggregate materializes it).
         reps = reps.localCheckpoint(eager=False)
-        exact = (
-            probe.join(reps, "doc_sha")
-            .where(F.col("conv_id") != F.col("rep"))
-            .select(
-                F.least("conv_id", "rep").alias("conv_id_a"),
-                F.greatest("conv_id", "rep").alias("conv_id_b"),
-                F.lit(100.0).alias("score"),
-                F.lit("exact").alias("method"),
-            )
-            .dropDuplicates(["conv_id_a", "conv_id_b"])
-        )
+        # each batch conv_id meets exactly one reps row: no duplicate edges
+        exact = star_edges(probe.join(reps, "doc_sha"))
 
         # ---- fuzzy candidates: batch bands ⋈ colliding corpus bands ---------
         # I/O ∝ BATCH, not corpus: only corpus bands whose full band key
@@ -211,11 +197,10 @@ class IncrementalPipeline:
         # hash-bucketed by band_hash) and (2) semi-joined against the
         # BROADCAST batch band keys BEFORE any capping — the r2 shape ran the
         # whole corpus band set through a ranking window every micro-batch.
-        # The surviving pool (colliding buckets only) is capped with the same
-        # deterministic smallest-conv_id rule as the batch path
-        # (blocking.py:21-27) and eagerly checkpointed: it is tiny (≤ cap ×
-        # colliding buckets), and the metrics counts + candidate join all read
-        # the materialized pool instead of rescanning the corpus.
+        # The surviving pool (colliding buckets only) is capped by the batch
+        # path's operator (blocking.cap_band_pool) and checkpointed: it is
+        # tiny (≤ cap × colliding buckets), and the metrics counts + candidate
+        # join all read the materialized pool instead of rescanning the corpus.
         batch_keys = batch_bands.select(*key).distinct()
         if self.wh.exists("corpus_bands"):
             corpus_pruned, pruning = self.wh.read_bucket_pruned(
@@ -227,18 +212,8 @@ class IncrementalPipeline:
             pool = colliding.unionByName(batch_bands)
         else:
             pool, pruning = batch_bands, {"buckets_read": 0, "buckets_total": None}
-        w_rank = Window.partitionBy(*key).orderBy("conv_id")
-        w_size = Window.partitionBy(*key)
-        capped = (
-            pool.select(
-                *key,
-                "conv_id",
-                F.row_number().over(w_rank).alias("_rn"),
-                F.count(F.lit(1)).over(w_size).alias("_sz"),
-            )
-            .where(F.col("_rn") <= cfg.max_band_bucket)
-            .localCheckpoint(eager=False)  # the heads aggregate materializes it
-        )
+        # lazy: the heads aggregate materializes it
+        capped = cap_band_pool(pool, cfg).localCheckpoint(eager=False)
         # ONE aggregate materializes the capped pool and yields (a) the pool
         # metrics (head rows carry the pre-cap bucket size, so summing them
         # under a _rn==1 guard equals the old heads-only aggregate), (b) the
@@ -342,13 +317,12 @@ class IncrementalPipeline:
         # the CPU-bound difflib job instead of serially after it: batch wall
         # = max(scoring, persists), not their sum. Tombstoned batches keep the
         # strict order (the tombstone frame's lineage is caller-owned and must
-        # not race a table rewrite).
+        # not race a table rewrite); so does a fresh warehouse's first batch.
         overlap = self.wh.exists("corpus_reps") and tombstones is None
-        f_docs = f_reps = f_bands = None
         # one pool for every table write of the batch; the finally below
         # shuts it down on any exit, so a failed scoring job cannot leave
         # table rewrites running after its exception has propagated
-        pool_exec = ThreadPoolExecutor(max_workers=6) if self.wh.exists("corpus_reps") else None
+        pool_exec = ThreadPoolExecutor(max_workers=6)
         try:
             if overlap:
                 f_bands = pool_exec.submit(_persist_bands)
@@ -361,37 +335,9 @@ class IncrementalPipeline:
                 f_docs = pool_exec.submit(_persist_docs)
                 f_reps = pool_exec.submit(_persist_reps)
 
-            # exact-exclusion (J4) is SHA-INEQUALITY, not an edge anti-join: exact
-            # edges are stars now, so two non-rep members of one sha group never
-            # appear in `exact` — equal shas are the complete exclusion criterion
-            # (same shape as scoring.fuzzy_edges).
-            paired = (
-                cand.join(
-                    texts.select(F.col("conv_id").alias("conv_id_a"), F.col("doc_sha").alias("sha_a"), F.col("norm_text").alias("ta")),
-                    "conv_id_a",
-                )
-                .join(
-                    texts.select(F.col("conv_id").alias("conv_id_b"), F.col("doc_sha").alias("sha_b"), F.col("norm_text").alias("tb")),
-                    "conv_id_b",
-                )
-                .where(F.col("sha_a") != F.col("sha_b"))
-            )
-            # spread the CPU-bound scoring stage, keyed by conv_id_b so the
-            # scorer's set_seq2 reuse fires (see scoring.fuzzy_edges)
-            paired = paired.repartition(
-                paired.sparkSession.sparkContext.defaultParallelism, F.col("conv_id_b")
-            )
-            fuzzy = (
-                paired.withColumn("ratio", difflib_ratio_once(F.col("ta"), F.col("tb")))
-                .where(F.col("ratio") > F.lit(cfg.ratio_threshold))
-                .select(
-                    "conv_id_a",
-                    "conv_id_b",
-                    (F.col("ratio") * 100.0).alias("score"),
-                    F.lit("fuzzy").alias("method"),
-                )
-            )
-            new_edges = exact.unionByName(fuzzy)
+            # the batch path's scorer: sha-inequality exclusion (J4), then
+            # difflib over the conv_id_b-keyed exchange
+            new_edges = exact.unionByName(fuzzy_edges(cand, texts, cfg))
 
             # ---- J5: drop edges touching upstream-deleted conversations ---------
             if tombstones is not None:
@@ -434,10 +380,7 @@ class IncrementalPipeline:
                     old_n = self.wh.read("clusters").count()
             else:
                 old_n = -1
-            full_cc_in_pool = (
-                self.wh.exists("corpus_reps")
-                and 0 <= old_n < cfg.incremental_clusters_min_corpus
-            )
+            full_cc_in_pool = 0 <= old_n < cfg.incremental_clusters_min_corpus
             if full_cc_in_pool:
                 cc_edges = new_edges.select("conv_id_a", "conv_id_b")
                 if self.wh.exists("edges"):
@@ -463,38 +406,22 @@ class IncrementalPipeline:
                         ),
                     )
 
-            if pool_exec is not None:
-                if not overlap:  # strict order: every write after scoring
-                    f_docs = pool_exec.submit(_persist_docs)
-                    f_reps = pool_exec.submit(_persist_reps)
-                    f_bands = pool_exec.submit(_persist_bands)
-                # in overlap mode docs/reps/bands have been racing the scoring
-                # job since before difflib ran; edges + the clusters swap remain
-                f_edges = pool_exec.submit(_persist_edges)
-                f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
-                stats = f_docs.result()
-                f_reps.result()
-                f_bands.result()
-                edge_stats = f_edges.result()
-                if f_clusters is not None:
-                    f_clusters.result()
-            else:
-                # legacy warehouse without the reps index: the backfill seed
-                # reads the POST-merge corpus (a batch-only seed would make old
-                # shas look new to later probes and silently split their groups),
-                # so the docs merge must land first — sequential on this path.
-                stats = _persist_docs()
-                seed = (
-                    self.wh.read("corpus_docs")
-                    .groupBy("doc_sha")
-                    .agg(F.min("conv_id").alias("rep"))
-                )
-                self.wh.upsert("corpus_reps", seed, key="doc_sha", n_buckets=cfg.warehouse_buckets)
-                _persist_bands()
-                edge_stats = _persist_edges()
+            if not overlap:  # strict order: every write after scoring
+                f_docs = pool_exec.submit(_persist_docs)
+                f_reps = pool_exec.submit(_persist_reps)
+                f_bands = pool_exec.submit(_persist_bands)
+            # in overlap mode docs/reps/bands have been racing the scoring
+            # job since before difflib ran; edges + the clusters swap remain
+            f_edges = pool_exec.submit(_persist_edges)
+            f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
+            stats = f_docs.result()
+            f_reps.result()
+            f_bands.result()
+            edge_stats = f_edges.result()
+            if f_clusters is not None:
+                f_clusters.result()
         finally:
-            if pool_exec is not None:
-                pool_exec.shutdown(wait=True, cancel_futures=True)
+            pool_exec.shutdown(wait=True, cancel_futures=True)
         metrics.record_count(
             "ingest.upsert_corpus_docs",
             stats["rows_written"] or 0,
@@ -670,12 +597,7 @@ class IncrementalPipeline:
             .withColumn("rep", F.min("conv_id").over(Window.partitionBy("doc_sha")))
             .localCheckpoint(eager=True)
         )
-        restar = members.where(F.col("conv_id") != F.col("rep")).select(
-            F.col("rep").alias("conv_id_a"),
-            F.col("conv_id").alias("conv_id_b"),
-            F.lit(100.0).alias("score"),
-            F.lit("exact").alias("method"),
-        )
+        restar = star_edges(members)
         pair = ["conv_id_a", "conv_id_b"]
         edges = None
         if wh.exists("edges"):

@@ -30,9 +30,3 @@ def within_retention(ts_col: Column, retention_days: int | None, now: Column | N
 def apply_ingest_gate(df: DataFrame, retention_days: int | None, ts_col: str = "ts", now: Column | None = None) -> DataFrame:
     return df.where(within_retention(F.col(ts_col), retention_days, now))
 
-
-def expired_rows(df: DataFrame, retention_days: int | None, ts_col: str = "ts", now: Column | None = None) -> DataFrame:
-    """Rows the daily sweep would delete (database.py:255-285)."""
-    if retention_days is None:
-        return df.limit(0)
-    return df.where(~within_retention(F.col(ts_col), retention_days, now))

@@ -2,7 +2,8 @@
 
 Reference parity (file:line in /root/reference/):
 - exact probe   — ``SELECT ... WHERE Content = ?`` emitting 100%-score matches
-  (database.py:365-388). Spark: self-equi-join on ``doc_sha`` (J2).
+  (database.py:365-388). Spark: a star per ``doc_sha`` group (J2, see
+  exact_edges / star_edges).
 - fuzzy scorer  — ``SequenceMatcher(None, stored, incoming).ratio()``
   (database.py:395) with the DEFAULT autojunk=True. F1≥0.99 parity forces us
   to call difflib itself — but only on LSH-surviving candidates (a vanishing
@@ -13,7 +14,10 @@ Reference parity (file:line in /root/reference/):
 - score         — ``ratio * 100`` (database.py:399); exact matches score 100
   (database.py:382).
 - exclusion     — records already matched exactly are skipped by the fuzzy
-  loop (``texts[0] not in result``, database.py:393) → left_anti join (J4).
+  loop (``texts[0] not in result``, database.py:393) → sha inequality (J4).
+
+Batch (pipeline.run_batch) and incremental (ingest.process_batch) runs share
+star_edges and fuzzy_edges: the difflib scoring plan is built here only.
 """
 
 from __future__ import annotations
@@ -41,9 +45,9 @@ def difflib_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
     ``set_seq2`` (the expensive side — b2j index + autojunk classification)
     runs once per DISTINCT b in the batch instead of once per pair. Results
     are per-pair and order-independent, so this is value-identical to a
-    fresh matcher per pair (asserted by the scorer parity tests); the call
-    sites repartition candidate pairs BY conv_id_b so same-b pairs land in
-    the same batch and the reuse actually fires.
+    fresh matcher per pair (asserted by the scorer parity tests);
+    fuzzy_edges repartitions candidate pairs BY conv_id_b so same-b pairs
+    land in the same batch and the reuse actually fires.
     """
     import numpy as np
 
@@ -157,28 +161,33 @@ def exact_edges(docs: DataFrame) -> DataFrame:
     recoverable without materializing the pair.
     """
     reps = docs.groupBy("doc_sha").agg(F.min("conv_id").alias("rep"))
-    return (
-        docs.join(reps, "doc_sha")
-        .where(F.col("conv_id") != F.col("rep"))
-        .select(
-            F.col("rep").alias("conv_id_a"),
-            F.col("conv_id").alias("conv_id_b"),
-            F.lit(100.0).alias("score"),
-            F.lit("exact").alias("method"),
-        )
+    return star_edges(docs.join(reps, "doc_sha"))
+
+
+def star_edges(members: DataFrame) -> DataFrame:
+    """``(conv_id, rep)`` rows → one canonical exact edge per non-rep member:
+    (least, greatest, 100, 'exact'). Shared by the batch star (exact_edges),
+    the incremental probe and the purge's re-star."""
+    return members.where(F.col("conv_id") != F.col("rep")).select(
+        F.least("conv_id", "rep").alias("conv_id_a"),
+        F.greatest("conv_id", "rep").alias("conv_id_b"),
+        F.lit(100.0).alias("score"),
+        F.lit("exact").alias("method"),
     )
 
 
 def fuzzy_edges(candidates: DataFrame, docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Score LSH candidates that were not already exact matches.
 
-    candidates(conv_id_a, conv_id_b) × docs(conv_id, norm_text) →
+    candidates(conv_id_a, conv_id_b) × docs(conv_id, doc_sha, norm_text) →
     (conv_id_a, conv_id_b, score, score method='fuzzy') with
     ratio > cfg.ratio_threshold (strict, database.py:396).
 
     The exact-exclusion (J4, database.py:393) is sha-equality, not an edge
     anti-join: exact edges are stars (see exact_edges), so two non-rep
-    members of one exact group would otherwise be re-scored here.
+    members of one exact group would otherwise be re-scored here. The sha
+    filter runs BEFORE any text is joined: most band collisions are
+    same-sha pairs, which never ship their texts.
     """
     shas = docs.select("conv_id", "doc_sha")
     cand = (

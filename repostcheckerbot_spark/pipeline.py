@@ -6,10 +6,11 @@ The Spark rendering of the reference's detection path (SURVEY.md §3.2;
   read transcripts
     → assemble docs (stable turn order; placeholder filter)      [1 shuffle]
     → retention gate                                             [narrow]
-    → exact edges: sha self-join (J2)                            [1 shuffle]
-    → fuzzy: shingle→MinHash→LSH bands (narrow) → blocked
-      self-join (J3) → anti-join exact (J4) → Arrow-batched
-      difflib scoring → threshold (F2/F3)                        [2 shuffles]
+    → exact edges: a star to each doc_sha group's min (J2)       [1 shuffle]
+    → fuzzy: shingle→OPH MinHash (one Arrow UDF) → LSH bands
+      (narrow) → capped, blocked self-join (J3) → sha-inequality
+      exclusion (J4) → Arrow-batched difflib scoring →
+      threshold (F2/F3)                                          [2 shuffles]
     → tombstone anti-join (J5)
     → connected components (large/small-star, checkpointed)      [O(log n)]
     → clusters + report

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from repostcheckerbot_spark.config import PipelineConfig
 from repostcheckerbot_spark.fixtures import generate, to_spark
 from repostcheckerbot_spark.operators.assembly import assemble_docs
-from repostcheckerbot_spark.operators.blocking import generate_candidates, with_minhash, with_shingles
+from repostcheckerbot_spark.operators.blocking import _kgram_hashes, generate_candidates, with_signature
 
 CFG = PipelineConfig()
 
@@ -20,20 +20,19 @@ def _docs(spark, texts: list[str]):
     )
 
 
-def test_shingles_deterministic(spark):
-    df = with_shingles(_docs(spark, ["abcdefghij", "abcdefghij", "short"]), CFG)
-    rows = {r.conv_id: r.shingle_hashes for r in df.collect()}
-    assert rows["c0"] == rows["c1"]
-    assert len(rows["c0"]) == 10 - CFG.shingle_k + 1
-    assert len(rows["c2"]) == 1  # doc shorter than k → whole text
-    # xxhash64 of the same shingle appearing at two positions is equal
-    df2 = with_shingles(_docs(spark, ["abcabcabc"]), PipelineConfig(shingle_k=3))
-    h = df2.collect()[0].shingle_hashes
-    assert h[0] == h[3] == h[6]
+def test_shingles_deterministic():
+    k = CFG.shingle_k
+    h = _kgram_hashes("abcdefghij", k)
+    assert list(h) == list(_kgram_hashes("abcdefghij", k))
+    assert len(h) == 10 - k + 1
+    assert len(_kgram_hashes("short", k)) == 1  # doc shorter than k → whole text
+    # the same shingle at two positions hashes equal
+    h3 = _kgram_hashes("abcabcabc", 3)
+    assert h3[0] == h3[3] == h3[6]
 
 
 def test_minhash_identical_docs_identical_signature(spark):
-    df = with_minhash(with_shingles(_docs(spark, ["hello world " * 10, "hello world " * 10]), CFG), CFG)
+    df = with_signature(_docs(spark, ["hello world " * 10, "hello world " * 10]), CFG)
     sigs = [r.minhash for r in df.collect()]
     assert sigs[0] == sigs[1]
     assert len(sigs[0]) == CFG.num_hashes
@@ -77,49 +76,6 @@ def test_band_bucket_cap_records_metrics_not_silent(spark):
     assert bucket_metrics.count() > 0
     assert bucket_metrics.agg(F.max("bucket_size")).collect()[0][0] == 20
     assert cands.count() <= 4 * 3 / 2
-
-
-def test_blocklocal_hybrid_candidates(spark):
-    """Small blocks: applyInPandas all-pairs (recall 1.0 within block); big
-    blocks: routed through the banded-LSH path. Union is a superset of the
-    LSH candidates on small blocks, identical on big ones."""
-    import pandas as pd
-
-    from repostcheckerbot_spark.config import PipelineConfig
-    from repostcheckerbot_spark.operators.blocking import blocklocal_candidates, generate_candidates
-
-    cfg = PipelineConfig()
-    base = "the quick brown fox jumps over the lazy dog and keeps running " * 4
-    rows = []
-    # small block: 4 docs under tool 'small' (2 near-dups + 2 unrelated)
-    # role_sig is BIGINT, matching the production assemble_docs/DOC_COLS shape
-    # (a string here used to mask an Arrow schema mismatch in the grouped
-    # apply's hardcoded out_schema — now derived from the input types)
-    rows.append(("s1", base, "small", 7))
-    rows.append(("s2", base[:-20] + "with changed tail xx", "small", 7))
-    rows.append(("s3", "completely different content here " * 6, "small", 7))
-    rows.append(("s4", "yet another unrelated doc " * 8, "small", 7))
-    # big block: 12 docs under tool 'big' — above the max_block=8 cut
-    for i in range(12):
-        rows.append((f"b{i:02d}", base + f" suffix {i}", "big", 7))
-    docs = spark.createDataFrame(rows, "conv_id string, norm_text string, tool string, role_sig bigint")
-
-    pairs, _ = blocklocal_candidates(docs, cfg, max_block=8)
-    got = {(r.conv_id_a, r.conv_id_b) for r in pairs.collect()}
-
-    # small block contributes exactly its all-pairs set
-    small_ids = ["s1", "s2", "s3", "s4"]
-    small_expected = {(a, b) for i, a in enumerate(small_ids) for b in small_ids[i + 1:] if a < b}
-    assert {p for p in got if p[0].startswith("s")} == small_expected
-
-    # big block: identical to the LSH path run on it alone
-    lsh_pairs, _ = generate_candidates(docs.where(F.col("tool") == "big"), cfg)
-    lsh_big = {(r.conv_id_a, r.conv_id_b) for r in lsh_pairs.collect()}
-    assert {p for p in got if p[0].startswith("b")} == lsh_big
-    assert len(lsh_big) > 0  # the near-dup family collides in LSH
-
-    # no cross-block pairs ever
-    assert not any(a[0] != b[0] for a, b in got)
 
 
 def test_sorted_neighborhood_pairs_known_answer(spark):

@@ -55,6 +55,11 @@ def test_cross_batch_exact_match_and_identity_skip(spark, pipe):
     clusters = {r.conv_id: r.cluster_id for r in r2["clusters"].collect()}
     assert clusters == {"c_orig": "c_orig", "c_repost": "c_orig"}
 
+    # batch 3: a repost sorting BELOW the stored rep stars onto it, canonically
+    r3 = pipe.process_batch(_turns(spark, _conv("a_early", BASE, ts=TS + timedelta(days=2))))
+    edges = [(e.conv_id_a, e.conv_id_b, e.method) for e in r3["new_edges"].collect()]
+    assert edges == [("a_early", "c_orig", "exact")]
+
 
 def test_cross_batch_fuzzy_match(spark, pipe):
     pipe.process_batch(_turns(spark, _conv("c_a", BASE)))
@@ -517,7 +522,7 @@ def test_failed_scoring_leaves_no_table_write_running(spark, pipe, monkeypatch):
     flight: process_batch raises only after every write has finished."""
     import time
 
-    from repostcheckerbot_spark.operators import ingest
+    from repostcheckerbot_spark.operators import scoring
 
     pipe.process_batch(_turns(spark, _conv("c_a", BASE)))
     calls = []
@@ -533,10 +538,28 @@ def test_failed_scoring_leaves_no_table_write_running(spark, pipe, monkeypatch):
 
     monkeypatch.setattr(Warehouse, "upsert", slow_upsert)
     monkeypatch.setattr(
-        ingest, "difflib_ratio_once", lambda a, b: F.raise_error(F.lit("injected scoring failure")).cast("double")
+        scoring, "difflib_ratio_once", lambda a, b: F.raise_error(F.lit("injected scoring failure")).cast("double")
     )
     mutated = [BASE[0], "a completely different second turn with fresh content " * 3]
     with pytest.raises(Exception, match="injected scoring failure"):
         pipe.process_batch(_turns(spark, _conv("c_b", mutated, ts=TS + timedelta(days=2))))
     raised = time.time()
     assert calls and all(end <= raised for _, end in calls)
+
+
+def test_docs_without_reps_index_raise_before_any_write(spark, pipe):
+    """A warehouse holding corpus_docs but no corpus_reps cannot be probed
+    exactly: process_batch raises ValueError and writes no table."""
+    from repostcheckerbot_spark.operators.assembly import assemble_docs
+    from repostcheckerbot_spark.operators.ingest import DOC_COLS
+
+    docs = assemble_docs(_turns(spark, _conv("c_a", BASE))).select(*DOC_COLS)
+    pipe.wh.upsert("corpus_docs", docs, key="conv_id", n_buckets=pipe.cfg.warehouse_buckets)
+
+    def files():
+        return {os.path.join(d, f) for d, _, fs in os.walk(pipe.wh.root) for f in fs}
+
+    before = files()
+    with pytest.raises(ValueError, match="corpus_reps"):
+        pipe.process_batch(_turns(spark, _conv("c_b", BASE, ts=TS + timedelta(days=1))))
+    assert files() == before

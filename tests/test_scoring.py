@@ -76,6 +76,19 @@ def test_fuzzy_edges_threshold_strict_and_anti_join(spark):
     assert got[("a", "c")].method == "fuzzy"
 
 
+def test_fuzzy_scoring_plans_one_udf_above_the_exchange(spark):
+    """Batch and incremental runs both score through fuzzy_edges: its plan
+    evaluates difflib once, above the conv_id_b-keyed exchange (the ratio
+    filter must not push a second copy of the UDF below it)."""
+    docs = spark.createDataFrame(
+        [("a", "abcdefghij"), ("c", "abcdefzzzz")], ["conv_id", "norm_text"]
+    ).withColumn("doc_sha", F.sha2("norm_text", 256))
+    cands = spark.createDataFrame([("a", "c")], ["conv_id_a", "conv_id_b"])
+    plan = fuzzy_edges(cands, docs, CFG)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.index("ArrowEvalPython") < plan.index("Exchange hashpartitioning(conv_id_b")
+
+
 def test_boundary_ratio_exactly_half_rejected(spark):
     # ratio == 0.5 must NOT match (strict inequality, database.py:396)
     a, b = "abcde", "abxyz"  # SequenceMatcher ratio = 2*2/10 = 0.4 → find real 0.5 pair
