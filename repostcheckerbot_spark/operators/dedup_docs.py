@@ -24,17 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's parallelism ahead of a CPU-bound Arrow
-    UDF stage. A small parquet file arrives as ONE partition (a single split
-    under files.maxPartitionBytes), which would pin the whole hashing stage to
-    one Python worker — measured 22 s → 3.6 s on the md5-MinHash family at
-    sf0.1. Same rationale as the difflib-stage repartition (scoring.py)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism)
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
 
 
 def normalized(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -47,7 +37,7 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (post-normalization) documents: one row per
     duplicated content hash with the member count and the keeper (min id)."""
     return (
-        normalized(_spread(docs))
+        normalized(spread_to_parallelism(docs))
         .withColumn("content_md5", F.md5("norm_text"))
         .groupBy("content_md5")
         .agg(F.count(F.lit(1)).alias("n_dups"), F.min("doc_id").alias("keeper_doc_id"))
@@ -58,7 +48,7 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
 def exact_dedup_keep_first(docs: DataFrame) -> DataFrame:
     """The dedup itself: keep the min doc_id per content hash (the distributed
     rendering of dropDuplicates with a deterministic survivor)."""
-    ranked = normalized(_spread(docs)).withColumn("content_md5", F.md5("norm_text"))
+    ranked = normalized(spread_to_parallelism(docs)).withColumn("content_md5", F.md5("norm_text"))
     keepers = ranked.groupBy("content_md5").agg(F.min("doc_id").alias("doc_id"))
     return ranked.join(keepers, ["content_md5", "doc_id"], "left_semi").select(docs.columns)
 
@@ -143,7 +133,7 @@ def minhash_md5_signatures(docs: DataFrame, k: int = 5, num_hashes: int = 8) -> 
             out.append(sig)
         return pd.Series(out)
 
-    return _spread(normalized(docs)).select("doc_id", sig_udf(F.col("norm_text")).alias("sig"))
+    return spread_to_parallelism(normalized(docs)).select("doc_id", sig_udf(F.col("norm_text")).alias("sig"))
 
 
 def minhash_md5(docs: DataFrame, k: int = 5, num_hashes: int = 8) -> DataFrame:
@@ -421,7 +411,7 @@ def simhash64(docs: DataFrame) -> DataFrame:
             his.append(int((bitval[32:] * weights_lo).sum()))
         return pd.Series([[h, l] for h, l in zip(his, los)])
 
-    return _spread(docs.select("doc_id", "text")).select(
+    return spread_to_parallelism(docs.select("doc_id", "text")).select(
         "doc_id", simhash_udf(F.col("text")).alias("s")
     ).select("doc_id", F.col("s")[0].alias("sim_hi"), F.col("s")[1].alias("sim_lo"))
 

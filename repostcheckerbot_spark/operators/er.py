@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
+
 #: tokens rarer than this absolute floor always survive the DF cap.
 TFIDF_DF_FLOOR = 5
 
@@ -311,11 +313,8 @@ def tfidf_cosine_pairs(
     # spread the scan ahead of the ×|grams| explode: a few-MB parquet file
     # arrives as 1-2 splits, pinning the tokenize+explode+tf map side (the
     # CPU-heavy stage: ~470 gram rows per doc) to 1-2 cores — measured a
-    # 2-task 6.3 s stage at sf1.0 (same rationale as dedup_docs._spread)
-    base = docs.select("doc_id", text_col)
-    sc = docs.sparkSession.sparkContext
-    if base.rdd.getNumPartitions() < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism)
+    # 2-task 6.3 s stage at sf1.0 (functions/partitioning.py)
+    base = spread_to_parallelism(docs.select("doc_id", text_col))
     grams = (
         base.select("doc_id", words.alias("_w"))
         .where(F.size("_w") >= n)

@@ -177,11 +177,16 @@ class IncrementalPipeline:
             )
             metrics.record_count("ingest.rep_probe", 0, wall_s=_lap(), **rep_pruning)
             crep = crep_src.select("doc_sha", F.col("rep").alias("crep"))
+            # batch docs star onto the stored rep (connected to every stored
+            # copy); the index keeps the group min, which a batch copy
+            # sorting below the stored rep takes over (least skips nulls)
             reps = batch_reps.join(crep, "doc_sha", "left").select(
-                "doc_sha", F.coalesce("crep", "brep").alias("rep")
+                "doc_sha",
+                F.coalesce("crep", "brep").alias("rep"),
+                F.least("crep", "brep").alias("min_rep"),
             )
         else:
-            reps = batch_reps.select("doc_sha", F.col("brep").alias("rep"))
+            reps = batch_reps.select("doc_sha", F.col("brep").alias("rep"), F.col("brep").alias("min_rep"))
         # reps feeds the exact star edges AND the corpus_reps merge; the lazy
         # checkpoint cuts the corpus_reps-file lineage so the overlap plan
         # below can rewrite the table while the scoring job still runs
@@ -282,11 +287,11 @@ class IncrementalPipeline:
             )
 
         def _persist_reps() -> None:
-            # corpus_reps index: upsert the batch shas' rep rows (existing
-            # shas rewrite their identical row — idempotent)
+            # corpus_reps index: upsert the batch shas' group mins (a re-run
+            # rewrites the identical row — idempotent)
             self.wh.upsert(
                 "corpus_reps",
-                reps.select("doc_sha", "rep"),
+                reps.select("doc_sha", F.col("min_rep").alias("rep")),
                 key="doc_sha",
                 n_buckets=cfg.warehouse_buckets,
                 touched=_tb("corpus_reps", sha_buckets),
@@ -544,7 +549,10 @@ class IncrementalPipeline:
         (process_batch), so deleting the rep would disconnect the surviving
         copies. Every sha group that loses a member is re-starred: edges from
         each survivor to the group's new min, and its ``corpus_reps`` row
-        re-pointed at it (groups whose rep survives get only existing pairs).
+        re-pointed at it. When the rep survives, the min is unchanged, but a
+        survivor starred onto an earlier rep (a later copy took the group
+        min over) gains its edge to the min; a pair already stored is
+        rewritten once, not duplicated.
         This keeps the reference's probe-all connectivity
         (database.py:328-358) under TTL/tombstone churn.
 

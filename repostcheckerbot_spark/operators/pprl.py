@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
+
 #: CLK width in bits. Must stay ≤ 62 so every ``1 << pos`` fits a signed
 #: BIGINT in BOTH engines (DuckDB raises on shifting into the sign bit).
 CLK_BITS = 60
@@ -87,20 +89,6 @@ def _bigram_masks_sql(field_expr: str, field_salt: str) -> str:
     )
 
 
-def _spread_encode_input(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's parallelism ahead of the CPU-bound
-    encode projection when the scan arrives under-split (a small parquet
-    file is ONE split under files.maxPartitionBytes, which pins the whole
-    md5-per-bigram encode to one core — measured four 1-task 12-15 s encode
-    stages at sf1.0 while 31 cores idled). Same rationale/shape as
-    dedup_docs._spread; a well-partitioned production scan passes through
-    untouched."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism)
-
-
 def clk_encode(df: DataFrame, id_col: str, fields: list[str], out_col: str = "clk") -> DataFrame:
     """(id, quasi-identifier fields) → (id, clk BIGINT).
 
@@ -109,7 +97,7 @@ def clk_encode(df: DataFrame, id_col: str, fields: list[str], out_col: str = "cl
     sets different bits (CLK composition per Schnell et al. 2011)."""
     mask_arrays = ", ".join(_bigram_masks_sql(f, f) for f in fields)
     clk = F.expr(f"aggregate(flatten(array({mask_arrays})), CAST(0 AS BIGINT), (acc, x) -> acc | x)")
-    return _spread_encode_input(df).select(F.col(id_col), clk.alias(out_col))
+    return spread_to_parallelism(df).select(F.col(id_col), clk.alias(out_col))
 
 
 def _spread_cand(cand: DataFrame) -> DataFrame:
@@ -256,7 +244,7 @@ def clk_encode_wide(
         f"(acc, p) -> transform(acc, (w, wi) -> "
         f"CASE WHEN p div {CLK_BITS} = wi THEN w | shiftleft(CAST(1 AS BIGINT), p % {CLK_BITS}) ELSE w END))"
     )
-    return _spread_encode_input(df).select(F.col(id_col), F.expr(fold).alias(out_col))
+    return spread_to_parallelism(df).select(F.col(id_col), F.expr(fold).alias(out_col))
 
 
 def popcount_wide(clk_col: str) -> Column:

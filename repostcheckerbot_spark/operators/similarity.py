@@ -22,19 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's parallelism ahead of the CPU-bound
-    vector stages (zip_with/aggregate cosines, centroid-assignment matmuls).
-    The embeddings parquet is written as ONE row group, so the scan arrives
-    as a single split and would otherwise pin the whole O(corpus × probes)
-    scoring stage to 1-2 cores (measured: 2-task 4.7 s brute-force stage at
-    sf1.0). Same pattern as dedup_docs._spread; a well-partitioned
-    production scan passes through untouched."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism)
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -54,7 +42,7 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """For each probe vector: the k most-cosine-similar corpus vectors
     (excluding itself). Probe side is broadcast — corpus is never shuffled."""
-    corpus = _spread(embeddings).select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cv"))
+    corpus = spread_to_parallelism(embeddings).select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cv"))
     p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv"))
     scored = (
         corpus.join(F.broadcast(p), F.col("probe_id") != F.col("corpus_id"))
@@ -91,7 +79,7 @@ def cosine_topk_lsh(
     """ANN: candidates share the sign sketch (all ``len(planes)`` hyperplane
     sides), exact cosine re-rank inside the bucket. Recall < 1 by design —
     compare against cosine_topk_bruteforce to measure it."""
-    corpus = with_sign_sketch(_spread(embeddings), planes, vec_col).select(
+    corpus = with_sign_sketch(spread_to_parallelism(embeddings), planes, vec_col).select(
         F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cv"), "sketch"
     )
     p = with_sign_sketch(probes, planes, vec_col).select(
@@ -154,7 +142,7 @@ def cosine_topk_lsh_multi(
     P(candidate) = (1−θ/π)^b for angle θ; T independent tables lift recall to
     1−(1−p)^T at T× candidate cost). One equi-join on (table_id, sketch);
     exact cosine re-rank; pair dedup before ranking."""
-    corpus = _multi_sketch(_spread(embeddings), tables, "corpus_id", "cv", id_col, vec_col)
+    corpus = _multi_sketch(spread_to_parallelism(embeddings), tables, "corpus_id", "cv", id_col, vec_col)
     p = _multi_sketch(probes, tables, "probe_id", "pv", id_col, vec_col)
     scored = (
         corpus.join(F.broadcast(p), ["table_id", "sketch"])
@@ -283,9 +271,11 @@ def _centroid_topn_udf(centroids: list[list[float]], n: int):
 
 
 def with_ivf_cell(embeddings: DataFrame, centroids: list[list[float]], vec_col: str = "embedding") -> DataFrame:
-    """Assign every vector to its nearest centroid (its IVF cell)."""
+    """Assign every vector to its nearest centroid (its IVF cell). No
+    spread: at sf0.1 on 4 cores, spreading the scan first made
+    ``cosine_topk_ivf`` slower in 10 of 10 interleaved pairs."""
     topn = _centroid_topn_udf(centroids, 1)
-    return _spread(embeddings).withColumn("cell", topn(F.col(vec_col))[0])
+    return embeddings.withColumn("cell", topn(F.col(vec_col))[0])
 
 
 #: default per-cell membership cap for the IVF join paths. One degenerate
@@ -453,7 +443,7 @@ def embedding_near_dup_pairs(
         max_cell,
     )
     topn = _centroid_topn_udf(centroids, nprobe)
-    probes = _spread(embeddings).select(
+    probes = spread_to_parallelism(embeddings).select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
         F.explode(topn(F.col(vec_col))).alias("cell"),

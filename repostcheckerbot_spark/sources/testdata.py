@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
+
 TABLES = [
     "region",
     "nation",
@@ -48,12 +50,9 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the documents file is written as ONE parquet row group, so the scan
     # cannot split below one task — and the three turnify branches below
     # each word-split + explode every doc (~10 turn rows per doc) on that
-    # single core. Spread the slim doc rows across the pool first (same
-    # rationale as dedup_docs._spread; a well-partitioned production scan
-    # passes through untouched).
-    sc = spark.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    # single core. Spread the slim doc rows across the pool first
+    # (functions/partitioning.py).
+    docs = spread_to_parallelism(docs)
 
     def turnify(df: DataFrame, conv_prefix: str, ts_offset_days: int) -> DataFrame:
         # The per-turn strings are computed BEFORE the explode (one transform

@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from repostcheckerbot_spark.operators import clustering
 from repostcheckerbot_spark.operators.clustering import connected_components, resume_connected_components
 
 
@@ -80,14 +81,11 @@ def test_checkpoint_and_resume(spark, tmp_path):
     assert got == want
 
 
-def test_driver_and_distributed_paths_identical(spark):
+def test_driver_and_distributed_paths_identical(spark, monkeypatch):
     """The bounded union-find fast path and the star-contraction path must
     produce IDENTICAL clusters (same min-id convention, same singleton
-    handling)."""
-    from pyspark.sql import functions as F
-
-    from repostcheckerbot_spark.operators.clustering import connected_components
-
+    handling). A graph under the row bound but over the byte budget takes
+    the distributed path too, and the refusal is recorded."""
     # chain + triangle + isolated pair + singleton vertex
     edges = spark.createDataFrame(
         [("b", "c"), ("c", "d"), ("x", "y"), ("y", "z"), ("z", "x"), ("p", "q")],
@@ -100,6 +98,12 @@ def test_driver_and_distributed_paths_identical(spark):
     s = {r.conv_id: r.cluster_id for r in slow.collect()}
     assert f == s
     assert f == {"b": "b", "c": "b", "d": "b", "x": "x", "y": "x", "z": "x", "p": "p", "q": "p", "s": "s"}
+    monkeypatch.setattr(clustering, "_driver_byte_budget", lambda spark: 4)
+    metrics = []
+    capped = connected_components(edges, vertices=verts, metrics=metrics)
+    assert {r.conv_id: r.cluster_id for r in capped.collect()} == f
+    modes = [m.get("mode") for m in metrics]
+    assert "collect_refused" in modes and "driver_union_find" not in modes
 
 
 def test_star_clusters_chain_and_hub(spark):
@@ -415,10 +419,11 @@ def test_ktruss_matches_sequential_referee(spark):
             assert got == ktruss_sequential(edges, k), f"k={k}"
 
 
-def test_threshold_clustering_fast_and_distributed_identical(spark):
-    """The bounded driver fast path (one collect + per-threshold union-find)
-    and the distributed contraction path must produce IDENTICAL ladders,
-    including singletons from the vertex frame."""
+def test_threshold_clustering_fast_and_distributed_identical(spark, monkeypatch):
+    """The bounded driver fast path (one collect + one union-find pass) and
+    the distributed contraction path must produce IDENTICAL ladders,
+    including singletons from the vertex frame — also when the byte budget,
+    not the row bound, refuses the collect."""
     from repostcheckerbot_spark.operators.clustering import threshold_clustering
 
     rng = random.Random(11)
@@ -442,12 +447,18 @@ def test_threshold_clustering_fast_and_distributed_identical(spark):
     )
     assert fast == slow
     assert ("solo", 2, "solo") in fast and ("solo", 6, "solo") in fast
+    # one byte under the ladder's id bytes: the ladder's collect is refused,
+    # each level's smaller closure still fits
+    ladder_bytes = sum(len(a) + len(b) for a, b, _ in edges)
+    monkeypatch.setattr(clustering, "_driver_byte_budget", lambda spark: ladder_bytes - 1)
+    assert sorted(map(tuple, threshold_clustering(e, [2, 6], vertices=v).collect())) == fast
 
 
-def test_pivot_clusters_fast_and_mis_paths_identical(spark):
+def test_pivot_clusters_fast_and_mis_paths_identical(spark, monkeypatch):
     """The bounded driver fast path (one collect + sequential greedy) and
     the distributed MIS-round path must produce IDENTICAL pivot
-    clusterings, including vertex singletons."""
+    clusterings, including vertex singletons — also when the byte budget
+    refuses the collect."""
     from repostcheckerbot_spark.operators.clustering import pivot_clusters
 
     rng = random.Random(13)
@@ -464,6 +475,8 @@ def test_pivot_clusters_fast_and_mis_paths_identical(spark):
     )
     assert fast == mis
     assert ("alone", "alone") in fast
+    monkeypatch.setattr(clustering, "_driver_byte_budget", lambda spark: 4)
+    assert sorted(map(tuple, pivot_clusters(e, vertices=v).collect())) == fast
 
 
 def test_threshold_clustering_vertices_cover_edges_flag_identical(spark):

@@ -6,6 +6,7 @@ from datetime import date, datetime
 
 from pyspark.sql import functions as F
 
+from repostcheckerbot_spark.functions.partitioning import spread_to_parallelism
 from repostcheckerbot_spark.functions.text import PLACEHOLDER_TEXTS, doc_sha, is_placeholder, normalize_ws
 from repostcheckerbot_spark.functions.timeutil import age_days, month_delta, time_ago
 
@@ -76,3 +77,17 @@ def test_time_ago_cascade(spark):
     df = spark.createDataFrame([(t,) for t, _ in rows], ["ts"])
     got = [r[0] for r in df.select(time_ago(F.col("ts"), F.lit(now))).collect()]
     assert got == [e for _, e in rows]
+
+
+def test_spread_to_parallelism_spreads_only_under_split_frames(spark):
+    """A frame already at defaultParallelism partitions passes through
+    unchanged; a 1-split frame is repartitioned to defaultParallelism.
+    Checked on plans, so no Spark job runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, numPartitions=par)
+    assert spread_to_parallelism(wide) is wide
+    spread = spread_to_parallelism(spark.range(0, 100, numPartitions=1))
+    assert spread._jdf.queryExecution().logical().numPartitions() == par
+    assert set(tracker.getJobIdsForGroup()) == before

@@ -59,6 +59,8 @@ def test_cross_batch_exact_match_and_identity_skip(spark, pipe):
     r3 = pipe.process_batch(_turns(spark, _conv("a_early", BASE, ts=TS + timedelta(days=2))))
     edges = [(e.conv_id_a, e.conv_id_b, e.method) for e in r3["new_edges"].collect()]
     assert edges == [("a_early", "c_orig", "exact")]
+    # ...and the corpus_reps index takes the new group min
+    assert [r.rep for r in pipe.wh.read("corpus_reps").collect()] == ["a_early"]
 
 
 def test_cross_batch_fuzzy_match(spark, pipe):
