@@ -55,18 +55,10 @@ class PipelineConfig:
     #: by the exact sha path, and uncapped they produce O(s²) pairs (skew).
     max_band_bucket: int = 64
 
-    # --- incremental clustering -------------------------------------------
-    #: corpus size (clusters rows) above which process_batch switches from
-    #: full-recompute CC to the incremental affected-component update. The
-    #: incremental path's extra joins/merge only pay off once the full
-    #: rewrite is the dominant cost (measured: at ≤5k-conv corpora full
-    #: recompute is ~1.4× faster; the crossover is well below this at real
-    #: scale, where a full clusters rewrite per micro-batch is unshippable).
-    incremental_clusters_min_corpus: int = 200_000
-
     # --- clustering --------------------------------------------------------
     #: hard cap on star-contraction rounds (converges in O(log n); 50 is a
-    #: runaway backstop, not a tuning knob).
+    #: runaway backstop, not a tuning knob). Batch runs and every incremental
+    #: tick, purge and rebuild recompute clusters in full under it.
     cc_max_iterations: int = 50
 
     # --- placement ---------------------------------------------------------

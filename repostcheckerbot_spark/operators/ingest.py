@@ -21,9 +21,9 @@ batch, never the corpus:
     → anti-join tombstones                       (J5)
     → upsert docs/bands/reps/edges state         (ST5 idempotent bucketed
               MERGEs — write I/O ∝ touched buckets)
-    → clusters: hybrid update — full recompute below
-      cfg.incremental_clusters_min_corpus, affected-component-only CC merged
-      into the bucketed clusters table above it
+    → clusters: CC over stored ∪ new edges and stored ∪ batch convs — the
+              one corpus-wide step, the same writer as the purge's — swapped
+              in concurrently with the upserts
 
 State tables (Warehouse): ``corpus_docs`` (bucketed by conv_id),
 ``corpus_bands`` (bucketed by band_hash), ``corpus_reps`` (doc_sha → rep,
@@ -61,9 +61,6 @@ class IncrementalPipeline:
     def corpus_docs(self) -> DataFrame | None:
         return self.wh.read("corpus_docs") if self.wh.exists("corpus_docs") else None
 
-    def corpus_bands(self) -> DataFrame | None:
-        return self.wh.read("corpus_bands") if self.wh.exists("corpus_bands") else None
-
     def edges(self) -> DataFrame | None:
         return self.wh.read("edges") if self.wh.exists("edges") else None
 
@@ -88,12 +85,13 @@ class IncrementalPipeline:
         now=None,
     ) -> dict[str, DataFrame]:
         cfg = self.cfg
-        if self.wh.exists("corpus_docs") and not self.wh.exists("corpus_reps"):
-            # the exact probe reads reps only from the corpus_reps index, which
-            # every tick and purge maintains beside corpus_docs
-            raise ValueError(
-                "warehouse has corpus_docs but no corpus_reps index; rebuild it before ingesting"
-            )
+        if self.wh.exists("corpus_docs"):
+            # the exact probe reads reps only from the corpus_reps index, and
+            # the clusters recompute takes its stored vertices from clusters;
+            # every tick and purge maintains both beside corpus_docs
+            for table, fix in (("corpus_reps", "rebuild it"), ("clusters", "run recompute_clusters()")):
+                if not self.wh.exists(table):
+                    raise ValueError(f"warehouse has corpus_docs but no {table} table; {fix} before ingesting")
         metrics = MetricsSink(self.wh)
         t0 = time.monotonic()
 
@@ -363,53 +361,27 @@ class IncrementalPipeline:
             edge_buckets = list(erow["eb"])
             metrics.record_count("ingest.new_edges", int(erow["n"]), wall_s=_lap())
 
-            # ---- full-recompute clusters swap, hoisted INTO the persist pool ----
-            # Below the hybrid threshold the cluster update is a full CC +
-            # clusters swap (see the growth section below). Its inputs are all
-            # available BEFORE the four state writes from pre-merge state:
+            # ---- clusters: full recompute, the pool's fifth concurrent task ----
+            # Its inputs are all available BEFORE the four state writes, from
+            # pre-merge state:
             #   edges    ≡ old edges table ∪ new_edges checkpoint (exactly what
             #              the post-merge table will contain)
             #   vertices ≡ old clusters conv_ids ∪ batch conv_ids (the clusters
-            #              table carries one row per corpus conversation — the
-            #              invariant both growth paths and the purge janitor
-            #              maintain)
+            #              table carries one row per stored conversation — the
+            #              invariant every tick and purge maintains)
             # and the clusters table is the ONE table none of the four persists
-            # touches, so the whole recompute runs as a FIFTH concurrent task:
-            # batch wall = max(persists, clusters swap), not their sum. The old
-            # edge files are swapped by _persist_edges mid-pool, so the union is
-            # EAGERLY checkpointed first — every CC job then reads the
-            # checkpoint, never the live files.
+            # touches, so the recompute runs concurrently with them: batch wall
+            # = max(persists, clusters swap), not their sum. The old edge files
+            # are swapped by _persist_edges mid-pool, so the union is EAGERLY
+            # checkpointed first — every CC job then reads the checkpoint,
+            # never the live files.
+            cc_edges = new_edges.select("conv_id_a", "conv_id_b")
+            if self.wh.exists("edges"):
+                cc_edges = self.wh.read("edges").select("conv_id_a", "conv_id_b").unionByName(cc_edges)
+            cc_edges = cc_edges.localCheckpoint(eager=True)
+            cc_vertices = batch_docs.select("conv_id")
             if self.wh.exists("clusters"):
-                old_n = self.wh.get_meta("clusters", "n_rows")
-                if old_n is None:
-                    old_n = self.wh.read("clusters").count()
-            else:
-                old_n = -1
-            full_cc_in_pool = 0 <= old_n < cfg.incremental_clusters_min_corpus
-            if full_cc_in_pool:
-                cc_edges = new_edges.select("conv_id_a", "conv_id_b")
-                if self.wh.exists("edges"):
-                    cc_edges = (
-                        self.wh.read("edges").select("conv_id_a", "conv_id_b").unionByName(cc_edges)
-                    )
-                cc_edges = cc_edges.localCheckpoint(eager=True)
-                cc_vertices = (
-                    self.wh.read("clusters")
-                    .select("conv_id")
-                    .unionByName(batch_docs.select("conv_id"))
-                )
-
-                def _recompute_full() -> None:
-                    # bounded by the hybrid threshold: old_n < min_corpus rows,
-                    # so the driver union-find path applies (≤100k edges checked
-                    # inside connected_components; above it the distributed path
-                    # still only reads the checkpoint)
-                    self.wh.upsert_replace(
-                        "clusters",
-                        connected_components(
-                            cc_edges, vertices=cc_vertices, max_iterations=cfg.cc_max_iterations
-                        ),
-                    )
+                cc_vertices = self.wh.read("clusters").select("conv_id").unionByName(cc_vertices)
 
             if not overlap:  # strict order: every write after scoring
                 f_docs = pool_exec.submit(_persist_docs)
@@ -418,13 +390,12 @@ class IncrementalPipeline:
             # in overlap mode docs/reps/bands have been racing the scoring
             # job since before difflib ran; edges + the clusters swap remain
             f_edges = pool_exec.submit(_persist_edges)
-            f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
+            f_clusters = pool_exec.submit(self._replace_clusters, cc_edges, cc_vertices)
             stats = f_docs.result()
             f_reps.result()
             f_bands.result()
             edge_stats = f_edges.result()
-            if f_clusters is not None:
-                f_clusters.result()
+            n_clusters = f_clusters.result()
         finally:
             pool_exec.shutdown(wait=True, cancel_futures=True)
         metrics.record_count(
@@ -441,99 +412,13 @@ class IncrementalPipeline:
             buckets_touched=edge_stats["buckets_touched"],
             buckets_total=edge_stats["buckets_total"],
         )
-        all_edges = self.wh.read("edges")
-
-        # ---- implicit-cluster growth: INCREMENTAL component update ----------
-        # Cluster assignments only change inside components that a new edge
-        # touches (plus the brand-new batch vertices). Instead of re-running
-        # CC over the whole corpus every micro-batch (O(corpus) compute AND a
-        # full clusters rewrite), restrict to the affected subgraph:
-        #   touched   = endpoints of new edges ∪ batch conv_ids
-        #   affected  = every conv sharing an OLD cluster with a touched conv
-        #               (components are edge-closed, so old edges never leave
-        #               the affected set)
-        #   sub-CC    = CC over (edges with an endpoint in affected) ∪ new
-        #               edges, vertices = affected ∪ batch
-        # and MERGE the sub-assignment into the bucketed clusters table —
-        # work and write I/O ∝ batch-touched components, not corpus.
-        #
-        # HYBRID: below cfg.incremental_clusters_min_corpus rows the full
-        # recompute (driver union-find + one small write) is strictly cheaper
-        # than the affected-set joins + bucketed merge — measured 11.2 s vs
-        # 15.9 s per micro-batch at a 5k-conv corpus — so small states take
-        # the full path and big states the incremental one. First batch (no
-        # clusters yet) always runs the full CC.
-        #
-        # The threshold input is the MAINTAINED row count in the clusters
-        # table meta (Iceberg snapshot-summary analog), not a count() job per
-        # batch: clusters carries exactly one row per corpus conversation
-        # (vertices = all corpus docs in both paths), so the count advances by
-        # n_batch per batch and by −n_deleted per purge (the purge
-        # re-seeds it). Legacy warehouses without the stat count once.
-        # (old_n was resolved above the persist pool; the common full-
-        # recompute case already ran there as the fifth concurrent task.)
-        if full_cc_in_pool:
-            metrics.record_count("ingest.clusters_swap", 0, wall_s=_lap(), in_pool=True)
-        elif old_n >= cfg.incremental_clusters_min_corpus:
-            old_clusters = self.wh.read("clusters")
-            touched = (
-                new_edges.select(F.col("conv_id_a").alias("conv_id"))
-                .unionByName(new_edges.select(F.col("conv_id_b").alias("conv_id")))
-                .unionByName(batch_docs.select("conv_id"))
-                .distinct()
-            )
-            affected_cids = (
-                old_clusters.join(touched, "conv_id", "left_semi")
-                .select("cluster_id")
-                .distinct()
-            )
-            affected = (
-                old_clusters.join(affected_cids, "cluster_id", "left_semi")
-                .select("conv_id")
-                .unionByName(batch_docs.select("conv_id"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            sub_edges = all_edges.join(
-                affected.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a", "left_semi"
-            )
-            sub = connected_components(
-                sub_edges, vertices=affected, max_iterations=cfg.cc_max_iterations
-            )
-            cstats = self.wh.upsert(
-                "clusters", sub, key="conv_id", n_buckets=cfg.warehouse_buckets
-            )
-            metrics.record_count(
-                "ingest.clusters_merge",
-                cstats["rows_written"] or 0,
-                wall_s=_lap(),
-                buckets_touched=cstats["buckets_touched"],
-                buckets_total=cstats["buckets_total"],
-            )
-        else:
-            clusters = connected_components(
-                all_edges,
-                vertices=self.wh.read("corpus_docs").select("conv_id"),
-                max_iterations=cfg.cc_max_iterations,
-            )
-            if self.wh.exists("clusters"):
-                # full recompute: a straight bucketed swap — the MERGE
-                # machinery (touched-bucket read + anti-join + checkpoint)
-                # buys nothing when every row is being replaced
-                self.wh.upsert_replace("clusters", clusters)
-            else:
-                # first write creates the bucketed layout + meta the
-                # incremental path merges into later
-                self.wh.upsert("clusters", clusters, key="conv_id", n_buckets=cfg.warehouse_buckets)
-        # advance the maintained clusters row count: one row per corpus conv,
-        # and every batch doc is NEW (identity skip) — no count() job needed
-        self.wh.set_meta("clusters", "n_rows", max(old_n, 0) + n_batch)
+        metrics.record_count("ingest.clusters_swap", n_clusters, wall_s=_lap())
         metrics.record_count("ingest.batch", 0, wall_s=time.monotonic() - t0)
         metrics.flush()
         return {
             "batch_docs": batch_docs,
             "new_edges": new_edges,
-            "edges": all_edges,
+            "edges": self.wh.read("edges"),
             "clusters": self.wh.read("clusters"),
         }
 
@@ -650,19 +535,24 @@ class IncrementalPipeline:
                 f.result()
         return f_docs.result()
 
-    def _replace_clusters(self, edges: DataFrame, vertices: DataFrame) -> None:
-        """CC over ``edges`` ∪ ``vertices`` → swap ``clusters``, and re-seed
-        its maintained row count (one row per stored conv) from the written
-        files' footers."""
+    def _replace_clusters(self, edges: DataFrame, vertices: DataFrame) -> int:
+        """The one clusters writer: CC over ``edges`` ∪ ``vertices`` → swap
+        ``clusters``. The first write creates the table's bucketed layout and
+        stored schema. Returns the rows written, from the parquet footers."""
         clusters = connected_components(
             edges, vertices=vertices, max_iterations=self.cfg.cc_max_iterations
         )
-        self.wh.set_meta("clusters", "n_rows", self.wh.upsert_replace("clusters", clusters))
+        if self.wh.exists("clusters"):
+            return self.wh.upsert_replace("clusters", clusters)
+        return self.wh.upsert(
+            "clusters", clusters, key="conv_id", n_buckets=self.cfg.warehouse_buckets
+        )["rows_written"]
 
     def recompute_clusters(self) -> DataFrame:
-        """CC over the surviving edges ∪ surviving vertices → overwrite
-        ``clusters``. Edge sets are tiny relative to the corpus (matched pairs
-        only), so this is cheap relative to a batch."""
+        """CC over the stored edges ∪ stored docs → overwrite ``clusters``, or
+        create it on a warehouse that lacks it. Edge sets are tiny relative to
+        the corpus (matched pairs only), so this is cheap relative to a
+        batch."""
         edges = self.edges()
         if edges is None:
             edges = self.wh.spark.createDataFrame([], "conv_id_a string, conv_id_b string, score double, method string")

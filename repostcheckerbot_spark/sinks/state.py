@@ -75,17 +75,9 @@ class Warehouse:
             json.dump(meta, f)
 
     def get_meta(self, table: str, key: str, default=None):
-        """Read one key from the table's layout/stats metadata (e.g. a
-        maintained row count — Iceberg snapshot-summary analog). Returns
-        ``default`` when absent."""
+        """Read one key from the table's layout metadata (e.g. its bucket
+        count). Returns ``default`` when absent."""
         return self._read_table_meta(table).get(key, default)
-
-    def set_meta(self, table: str, key: str, value) -> None:
-        """Read-modify-write one metadata key, preserving layout keys
-        (n_buckets/bucket_key/schema)."""
-        meta = self._read_table_meta(table)
-        meta[key] = value
-        self._write_table_meta(table, meta)
 
     def overwrite(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         w = df.write.mode("overwrite")

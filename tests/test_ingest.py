@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 from datetime import datetime, timedelta
 
 import pytest
@@ -321,17 +322,12 @@ def test_corpus_bands_purge_rewrites_only_dead_band_buckets(spark, tmp_path):
 
 
 def test_incremental_cluster_update_matches_full_recompute(spark, tmp_path):
-    """The affected-component incremental cluster update (taken when the
-    corpus exceeds cfg.incremental_clusters_min_corpus) must produce the
-    IDENTICAL clusters table as the full-recompute path, batch for batch —
-    including cross-batch merges of previously separate components."""
-    full = IncrementalPipeline(
-        Warehouse(spark, str(tmp_path / "wh_full")), PipelineConfig()
-    )
-    incr = IncrementalPipeline(
-        Warehouse(spark, str(tmp_path / "wh_incr")),
-        PipelineConfig(incremental_clusters_min_corpus=0),
-    )
+    """Every tick recomputes clusters through the one writer: after each
+    batch the table equals the full CC of the corpus so far, including
+    cross-batch merges of previously separate components. The first tick
+    creates the bucketed layout with a stored schema."""
+    cfg = PipelineConfig()
+    pipe = IncrementalPipeline(Warehouse(spark, str(tmp_path / "wh_cc")), cfg)
     other = ["entirely different content in this conversation " * 4, "another reply " * 6]
     batches = [
         _turns(spark, _conv("c_a", BASE) + _conv("x_1", other)),
@@ -343,15 +339,17 @@ def test_incremental_cluster_update_matches_full_recompute(spark, tmp_path):
             + _conv("y_2", other, ts=TS + timedelta(days=2)),
         ),
     ]
-    for b in batches:
-        full.process_batch(b)
-        incr.process_batch(b)
-        got_f = {r.conv_id: r.cluster_id for r in full.wh.read("clusters").collect()}
-        got_i = {r.conv_id: r.cluster_id for r in incr.wh.read("clusters").collect()}
-        assert got_f == got_i
-    assert got_i == {
-        "c_a": "c_a", "d_b": "c_a", "e_c": "c_a", "x_1": "x_1", "y_2": "x_1",
-    }
+    expected = [
+        {"c_a": "c_a", "x_1": "x_1"},
+        {"c_a": "c_a", "d_b": "c_a", "x_1": "x_1"},
+        {"c_a": "c_a", "d_b": "c_a", "e_c": "c_a", "x_1": "x_1", "y_2": "x_1"},
+    ]
+    for i, (b, want) in enumerate(zip(batches, expected)):
+        pipe.process_batch(b)
+        if i == 0:
+            assert pipe.wh.get_meta("clusters", "n_buckets") == cfg.warehouse_buckets
+            assert pipe.wh.get_meta("clusters", "schema") is not None
+        assert {r.conv_id: r.cluster_id for r in pipe.wh.read("clusters").collect()} == want
 
 
 # ---- purge: pinned post-purge state, delete_keys, job budget ---------------
@@ -397,7 +395,25 @@ def test_purge_pins_post_purge_state(spark, tmp_path):
         "corpus_reps": "5a8e095f4acc13f4",
         "clusters": "f8771263d38c0793",
     }
-    assert pipe.wh.get_meta("clusters", "n_rows") == pipe.wh.read("clusters").count() == 5
+    assert pipe.wh.read("clusters").count() == 5
+
+
+def test_recompute_clusters_rebuilds_a_missing_table(spark, tmp_path):
+    """recompute_clusters on a warehouse without a clusters table writes the
+    same rows the ticks maintained, in the bucketed layout with a stored
+    schema, and the warehouse ingests again afterwards."""
+    pipe = _purge_fixture(spark, str(tmp_path / "wh_rebuild"))
+    want = _table_hash(pipe.wh, "clusters")
+    shutil.rmtree(pipe.wh._path("clusters"))
+    os.remove(pipe.wh._meta_path("clusters"))
+    assert not pipe.wh.exists("clusters")
+    pipe.recompute_clusters()
+    assert _table_hash(pipe.wh, "clusters") == want
+    assert pipe.wh.get_meta("clusters", "n_buckets") == pipe.cfg.warehouse_buckets
+    assert pipe.wh.get_meta("clusters", "schema") is not None
+    r = pipe.process_batch(_turns(spark, _conv("d_cp3", BASE, ts=TS + timedelta(days=2))))
+    clusters = {x.conv_id: x.cluster_id for x in r["clusters"].collect()}
+    assert clusters["d_cp3"] == clusters["a_rep"] == "a_rep"
 
 
 def _bucket_listing(wh, table) -> dict:
@@ -549,19 +565,28 @@ def test_failed_scoring_leaves_no_table_write_running(spark, pipe, monkeypatch):
     assert calls and all(end <= raised for _, end in calls)
 
 
-def test_docs_without_reps_index_raise_before_any_write(spark, pipe):
+def test_docs_without_reps_index_raise_before_any_write(spark, tmp_path):
     """A warehouse holding corpus_docs but no corpus_reps cannot be probed
-    exactly: process_batch raises ValueError and writes no table."""
+    exactly, and one without clusters would lose its stored conversations
+    from the clusters recompute: process_batch raises ValueError naming the
+    missing table before any Spark job, and writes no table."""
     from repostcheckerbot_spark.operators.assembly import assemble_docs
     from repostcheckerbot_spark.operators.ingest import DOC_COLS
 
     docs = assemble_docs(_turns(spark, _conv("c_a", BASE))).select(*DOC_COLS)
-    pipe.wh.upsert("corpus_docs", docs, key="conv_id", n_buckets=pipe.cfg.warehouse_buckets)
-
-    def files():
-        return {os.path.join(d, f) for d, _, fs in os.walk(pipe.wh.root) for f in fs}
-
-    before = files()
-    with pytest.raises(ValueError, match="corpus_reps"):
-        pipe.process_batch(_turns(spark, _conv("c_b", BASE, ts=TS + timedelta(days=1))))
-    assert files() == before
+    reps = docs.select("doc_sha", F.col("conv_id").alias("rep"))
+    tracker = spark.sparkContext.statusTracker()
+    cases = [
+        ("no corpus_reps table", {}),
+        (r"no clusters table; run recompute_clusters\(\)", {"corpus_reps": (reps, "doc_sha")}),
+    ]
+    for i, (message, stored) in enumerate(cases):
+        pipe = IncrementalPipeline(Warehouse(spark, str(tmp_path / f"wh_half_{i}")), PipelineConfig())
+        for table, (df, key) in {"corpus_docs": (docs, "conv_id"), **stored}.items():
+            pipe.wh.upsert(table, df, key=key, n_buckets=pipe.cfg.warehouse_buckets)
+        files = lambda: {os.path.join(d, f) for d, _, fs in os.walk(pipe.wh.root) for f in fs}  # noqa: E731
+        before, jobs = files(), set(tracker.getJobIdsForGroup())
+        with pytest.raises(ValueError, match=message):
+            pipe.process_batch(_turns(spark, _conv("c_b", BASE, ts=TS + timedelta(days=1))))
+        assert files() == before
+        assert set(tracker.getJobIdsForGroup()) == jobs
